@@ -1616,11 +1616,11 @@ def v10_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer. The expressions are v1's and v8's verbatim (shared
     helpers / identical arguments), so the result is unchanged —
     re-proved against the DuckDB oracle. The persist lives inside the
-    query build and is released via the house ``_cached_intermediates``
-    contract."""
+    query build and follows ``ftm_columnstore_spark.lifecycle``."""
+    from ftm_columnstore_spark.lifecycle import persist
     from ftm_columnstore_spark.operators.similarity import ivf_topk_portable
 
-    e = _t(spark, sf_dir, "embeddings").persist()
+    e = persist(_t(spark, sf_dir, "embeddings"))
     # one job materializes the cache AND fetches the query vector
     # (v8's collect, verbatim)
     qvec = [
@@ -1635,13 +1635,11 @@ def v10_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = exact.join(approx, on="vec_id").agg(
         F.count(F.lit(1)).alias("n_hits")
     )
-    out = hits.select(
+    return hits.select(
         F.lit(20).cast("long").alias("k"),
         "n_hits",
         F.round(F.col("n_hits") / 20.0, 6).alias("recall"),
     )
-    out._cached_intermediates = [e]
-    return out
 
 
 def v3_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -46,7 +46,11 @@ def fan_out(df):
     Estimates at or beyond the unknown-stats sentinel (relations with
     no statistics — e.g. LogicalRDD from createDataFrame — default to
     Long.MaxValue) are treated as UNKNOWN, not huge, and take the
-    exact probe; no real scan-rooted estimate gets near 2^62."""
+    exact probe; no real scan-rooted estimate gets near 2^62.
+
+    Caveat: the gate trusts bytes, not splits — a single unsplittable
+    file, or a coalesced or cached upstream relation, passes it and is
+    NOT fanned out; repartition such inputs before calling."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:

@@ -23,6 +23,7 @@ from ftm_columnstore_spark.functions.phonetics import (
     soundex_col,
     tokenize_col,
 )
+from ftm_columnstore_spark.lifecycle import persist, persisting
 from ftm_columnstore_spark.model.ftm import NAME_SCHEMAS
 
 
@@ -155,6 +156,7 @@ def score_pairs(pairs: DataFrame, statements: DataFrame) -> DataFrame:
     return scored.withColumn("score", F.round(score, 8))
 
 
+@persisting
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
@@ -214,23 +216,16 @@ def connected_components(
         # small-graph path — r08 spent two sequential driver jobs here
         # (eager localCheckpoint, then a count over it); folding them
         # saves a job per call (VERDICT r8 item 3, guide §2.6/§5).
-        # persist (vs localCheckpoint) also lets repeat invocations in
-        # one session hit the plan cache (the minhash_lsh_pairs lesson).
-        deduped = deduped.persist()
+        deduped = persist(deduped)
         n_edges = deduped.count()
         if 0 < small_graph_threshold >= n_edges:
             # rows cross to the driver only once the graph is known
-            # small; the collect reads the just-populated cache.
-            out = _cc_union_find(
-                edges.sparkSession, deduped.collect(), deduped.schema
-            )
-            out._cached_intermediates = [deduped]
-            return out
-        out = _cc_star(deduped, max_iterations, pre_deduped=True)
-        out._cached_intermediates = getattr(
-            out, "_cached_intermediates", []
-        ) + [deduped]
-        return out
+            # small; the collect reads the just-populated cache, and
+            # nothing reads the relation after it
+            rows = deduped.collect()
+            deduped.unpersist()
+            return _cc_union_find(edges.sparkSession, rows, deduped.schema)
+        return _cc_star(deduped, max_iterations, pre_deduped=True)
     labels = (
         edges.select(F.col("left_id").alias("id"))
         .union(edges.select("right_id"))

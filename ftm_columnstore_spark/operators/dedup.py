@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ftm_columnstore_spark.functions.text import shingles_col, word_tokens_col
+from ftm_columnstore_spark.lifecycle import persist, persisting
 
 
 # --- exact -------------------------------------------------------------------
@@ -85,28 +86,6 @@ def _perm_constants(num_hashes: int, seed: int = 0x5EED) -> list[tuple[int, int,
         )
         for _ in range(num_hashes)
     ]
-
-
-def unpersist_intermediates(df, blocking: bool = False) -> None:
-    """Release the persisted intermediates an operator attached to its
-    result (``df._cached_intermediates``). The pair-generation operators
-    persist a mid-relation (banded signatures, prefix sets, quantized
-    features) because their self-join reads it twice — and persist(),
-    unlike localCheckpoint, lets repeat invocations in the same session
-    hit the plan cache (measured: d5 4.0s cold vs 1.5s warm; an eager
-    localCheckpoint was 2x cold cost since wide array columns
-    materialize as row blocks). The cost of persist() is that entries
-    outlive the query in a long-lived session: call this after the
-    consuming action, or ``spark.catalog.clearCache()`` wholesale.
-
-    CAVEAT: the attribute lives on the returned DataFrame OBJECT, not
-    the plan — any further transformation (``.filter``, ``.select``)
-    returns a new DataFrame without it, and this call silently no-ops.
-    Keep a reference to the operator's direct result for the release
-    (``pairs = minhash_lsh_pairs(...); out = pairs.filter(...);
-    ...; unpersist_intermediates(pairs)``)."""
-    for cached in getattr(df, "_cached_intermediates", []):
-        cached.unpersist(blocking)
 
 
 def minhash_signature(
@@ -223,6 +202,7 @@ def _band_relation(signatures: DataFrame, num_bands: int) -> DataFrame:
     ).select("id", "signature", "bb.band", "bb.bucket")
 
 
+@persisting
 def minhash_lsh_pairs(
     signatures: DataFrame,
     num_bands: int = 16,
@@ -248,9 +228,8 @@ def minhash_lsh_pairs(
     # alone is lazy — all four consumers are separate stages of ONE job,
     # so they race to compute the uncached signature lineage
     # concurrently (measured 4-5x wall blowup at sf0.1); one count()
-    # populates the cache once before the fan-out. (caching contract:
-    # see unpersist_intermediates)
-    banded = _band_relation(signatures, num_bands).persist()
+    # populates the cache once before the fan-out.
+    banded = persist(_band_relation(signatures, num_bands))
     banded.count()
 
     slim = banded.select("id", "band", "bucket")
@@ -298,10 +277,10 @@ def minhash_lsh_pairs(
     )
     if min_jaccard_est > 0:
         out = out.filter(F.col("jaccard_est") >= min_jaccard_est)
-    out._cached_intermediates = [banded]
     return out
 
 
+@persisting
 def minhash_lsh_pairs_cross(
     new_signatures: DataFrame,
     corpus_signatures: DataFrame,
@@ -328,28 +307,20 @@ def minhash_lsh_pairs_cross(
 
     from pyspark import inheritable_thread_target
 
-    nb = _band_relation(new_signatures, num_bands).persist()
-    cb = _band_relation(corpus_signatures, num_bands).persist()
-    try:
-        # inheritable_thread_target copies the caller's JVM thread-local
-        # properties (job description/group — the bench and probe
-        # labels) into the pool threads, the documented semantics for
-        # driver-side concurrency (ADVICE r8); a failed side build
-        # releases both persists instead of stranding them.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(
-                pool.map(
-                    inheritable_thread_target(lambda df: df.count()),
-                    (nb, cb),
-                )
+    nb = persist(_band_relation(new_signatures, num_bands))
+    cb = persist(_band_relation(corpus_signatures, num_bands))
+    # inheritable_thread_target copies the caller's JVM thread-local
+    # properties (job description/group — the bench and probe labels)
+    # into the pool threads, the documented semantics for driver-side
+    # concurrency (ADVICE r8)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        list(
+            pool.map(
+                inheritable_thread_target(lambda df: df.count()),
+                (nb, cb),
             )
-    except Exception:
-        nb.unpersist()
-        cb.unpersist()
-        raise
-    out = cross_pairs_from_banded(nb, cb, min_jaccard_est)
-    out._cached_intermediates = [nb, cb]
-    return out
+        )
+    return cross_pairs_from_banded(nb, cb, min_jaccard_est)
 
 
 def cross_pairs_from_banded(
@@ -413,6 +384,7 @@ def cross_pairs_from_banded(
     return out
 
 
+@persisting
 def minhash_clusters(
     df: DataFrame,
     text_col: str = "text",
@@ -449,7 +421,7 @@ def minhash_clusters(
         pairs.select("left_id", "right_id"), edges_deduped=True
     )
     id_type = df.schema[id_col].dataType
-    out = (
+    return (
         df.select(F.col(id_col).alias("id"))
         .join(
             cmap.select(
@@ -464,10 +436,9 @@ def minhash_clusters(
             F.coalesce("__cid", "id").alias("cluster_id"),
         )
     )
-    out._cached_intermediates = getattr(pairs, "_cached_intermediates", [])
-    return out
 
 
+@persisting
 def minhash_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -484,11 +455,7 @@ def minhash_dedup(
     # star-contract: every right_id maps to min(left_id) over its pairs
     mapping = pairs.groupBy("right_id").agg(F.min("left_id").alias("root"))
     drop = mapping.select(F.col("right_id").alias(id_col))
-    out = df.join(drop, on=id_col, how="left_anti")
-    # propagate the pair stage's persisted intermediates so callers can
-    # release them (caching contract: unpersist_intermediates)
-    out._cached_intermediates = getattr(pairs, "_cached_intermediates", [])
-    return out
+    return df.join(drop, on=id_col, how="left_anti")
 
 
 # --- SimHash ------------------------------------------------------------------
@@ -759,6 +726,7 @@ def simhash_chunks(
     return votes.select("id", *chunk_cols)
 
 
+@persisting
 def simhash_pairs_portable(
     df: DataFrame,
     text_col: str = "text",
@@ -776,13 +744,10 @@ def simhash_pairs_portable(
     _check_simhash_params(bands, max_hamming)
     # persist + eager materialize — the bucket-size agg and both join
     # sides consume it; lazy persist lets those stages race to compute
-    # the lineage concurrently (see minhash_lsh_pairs). (caching
-    # contract: see unpersist_intermediates)
-    chunks = simhash_chunks(df, text_col, id_col, bands).persist()
+    # the lineage concurrently (see minhash_lsh_pairs).
+    chunks = persist(simhash_chunks(df, text_col, id_col, bands))
     chunks.count()
-    out = hamming_pairs_from_chunks(chunks, bands, max_hamming, max_bucket)
-    out._cached_intermediates = [chunks]
-    return out
+    return hamming_pairs_from_chunks(chunks, bands, max_hamming, max_bucket)
 
 
 def hamming_pairs_from_chunks(
@@ -859,6 +824,7 @@ def hamming_pairs_from_chunks(
 
 # --- n-gram Jaccard ------------------------------------------------------------
 
+@persisting
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -925,7 +891,7 @@ def ngram_jaccard_pairs(
             )
         )
     )
-    sets = (
+    sets = persist(
         tall.groupBy("id")
         .agg(
             ordered.alias("sh"),
@@ -944,7 +910,6 @@ def ngram_jaccard_pairs(
                 ).cast("int"),
             ).alias("pref"),
         )
-        .persist()
     )
     # eager materialize: the prefix self-join and both set join-backs
     # are four concurrent consumers — lazy persist lets them race to
@@ -998,13 +963,12 @@ def ngram_jaccard_pairs(
         .withColumn("inter", F.size(F.array_intersect("lsh", "rsh")))
     )
     jac = F.col("inter") / (F.col("ls") + F.col("rs") - F.col("inter"))
-    out = verified.select(
+    return verified.select(
         "left_id", "right_id", F.round(jac, 6).alias("jaccard")
     ).filter(F.col("jaccard") >= min_jaccard)
-    out._cached_intermediates = [sets]
-    return out
 
 
+@persisting
 def jaccard_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -1036,6 +1000,7 @@ def _plane_signs(num_planes: int, dim: int, seed: int = 0xB5) -> list[list[int]]
     ]
 
 
+@persisting
 def embedding_dup_pairs_portable(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1065,7 +1030,7 @@ def embedding_dup_pairs_portable(
     # without the persist the whole quantize+signature lineage is inlined
     # into BOTH sides, and without the count the two sides race to
     # compute it concurrently (same lesson as the banded MinHash relation)
-    feats = quantized_features(df, vec_col, id_col, num_planes, scale).persist()
+    feats = persist(quantized_features(df, vec_col, id_col, num_planes, scale))
     feats.count()
     l, r = feats.alias("l"), feats.alias("r")
     dotq = F.aggregate(
@@ -1076,7 +1041,7 @@ def embedding_dup_pairs_portable(
     cos = dotq.cast("double") / F.sqrt(
         F.col("l.nq").cast("double") * F.col("r.nq").cast("double")
     )
-    out = (
+    return (
         l.join(
             r,
             on=[F.col("l.sig") == F.col("r.sig"), F.col("l.id") < F.col("r.id")],
@@ -1091,10 +1056,9 @@ def embedding_dup_pairs_portable(
             "left_id", "right_id", F.round("__cos", 6).alias("cosine")
         )
     )
-    out._cached_intermediates = [feats]
-    return out
 
 
+@persisting
 def embedding_clusters(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1127,7 +1091,7 @@ def embedding_clusters(
         pairs.select("left_id", "right_id"), edges_deduped=True
     )
     id_type = df.schema[id_col].dataType
-    out = (
+    return (
         df.select(F.col(id_col).alias("id"))
         .join(
             cmap.select(
@@ -1142,8 +1106,6 @@ def embedding_clusters(
             F.coalesce("__cid", "id").alias("cluster_id"),
         )
     )
-    out._cached_intermediates = getattr(pairs, "_cached_intermediates", [])
-    return out
 
 
 def embedding_dup_pairs(
@@ -1177,6 +1139,7 @@ def embedding_dup_pairs(
     )
 
 
+@persisting
 def line_dedup(
     df,
     text_col: str = "text",
@@ -1227,7 +1190,7 @@ def line_dedup(
         F.posexplode(F.split(F.col(text_col), "\\Q" + sep + "\\E")).alias(
             "pos", "line"
         ),
-    ).where(F.trim("line") != "").persist()
+    ).where(F.trim("line") != "").transform(persist)
     keyed = lines.withColumn("h", F.md5(F.col("line")))
     # id is the struct's tie-break so a non-unique order column still
     # keeps exactly ONE occurrence per line. The agg carries the line
@@ -1258,7 +1221,7 @@ def line_dedup(
             sep,
         ).alias("text"),
     )
-    out = (
+    return (
         counts.join(rebuilt, on="id", how="left")
         .select(
             "id",
@@ -1267,8 +1230,6 @@ def line_dedup(
             F.coalesce("text", F.lit("")).alias("text"),
         )
     )
-    out._cached_intermediates = [lines]
-    return out
 
 
 def semantic_dedup_portable(
@@ -1613,6 +1574,7 @@ def _cut_dup_spans(docs: DataFrame, occ: DataFrame, k: int) -> DataFrame:
     return cut_docs.unionByName(untouched)
 
 
+@persisting
 def exact_substring_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -1676,11 +1638,11 @@ def exact_substring_dedup(
     docs = _tokenized_docs(df, text_col, id_col, keep_order_col)
     # the gram relation feeds BOTH sides of the firsts join (the agg
     # build and the occurrence probe) — persist so the explode+md5
-    # derive runs once, not twice (measured ~2s of d14's sf0.1 solo;
-    # release via unpersist_intermediates). Materializing |tokens|
-    # rows is the same working set the suffix-array formulation
-    # writes to disk, so the scale posture is unchanged.
-    grams = _doc_grams(docs, k).persist()
+    # derive runs once, not twice (measured ~2s of d14's sf0.1 solo).
+    # Materializing |tokens| rows is the same working set the
+    # suffix-array formulation writes to disk, so the scale posture is
+    # unchanged.
+    grams = persist(_doc_grams(docs, k))
     # struct projected before the agg (agg-input expressions run
     # interpreted inside the aggregate — see minhash_signature)
     firsts = (
@@ -1700,9 +1662,7 @@ def exact_substring_dedup(
                 & (F.col("pos") == F.col("__first.pos"))
             )
         )
-    out = _cut_dup_spans(docs, dup.select("id", "pos"), k)
-    out._cached_intermediates = [grams]
-    return out
+    return _cut_dup_spans(docs, dup.select("id", "pos"), k)
 
 
 def corpus_gram_index(
@@ -1720,6 +1680,7 @@ def corpus_gram_index(
     return _doc_grams(docs, k).select("h").distinct()
 
 
+@persisting
 def exact_substring_dedup_cross(
     batch: DataFrame,
     corpus: DataFrame | None = None,
@@ -1759,7 +1720,7 @@ def exact_substring_dedup_cross(
     # persisted for the same reason as exact_substring_dedup: the
     # batch gram relation feeds the corpus probe AND (with
     # within_batch) both sides of the firsts join
-    grams = _doc_grams(docs, k).persist()
+    grams = persist(_doc_grams(docs, k))
     # no .distinct() on the index side: corpus_gram_index is already
     # distinct, and leftsemi is set-semantics anyway — a redundant
     # distinct would re-shuffle the ENTIRE persisted index every
@@ -1768,9 +1729,7 @@ def exact_substring_dedup_cross(
         corpus_grams.select("h"), on="h", how="leftsemi"
     ).select("id", "pos")
     if not within_batch:
-        out = _cut_dup_spans(docs, in_corpus, k)
-        out._cached_intermediates = [grams]
-        return out
+        return _cut_dup_spans(docs, in_corpus, k)
     # struct projected before the agg (agg-input expressions run
     # interpreted inside the aggregate — see minhash_signature)
     firsts = (
@@ -1793,9 +1752,7 @@ def exact_substring_dedup_cross(
         )
         .select("id", "pos")
     )
-    out = _cut_dup_spans(docs, in_corpus.unionAll(batch_dup).distinct(), k)
-    out._cached_intermediates = [grams]
-    return out
+    return _cut_dup_spans(docs, in_corpus.unionAll(batch_dup).distinct(), k)
 
 
 def rewrite_cut_text(
@@ -1822,6 +1779,7 @@ def rewrite_cut_text(
     )
 
 
+@persisting
 def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1871,12 +1829,9 @@ def containment_pairs(
     # persist: the tall shingle relation feeds sizes, the df guard and
     # both self-join sides — without it the Arrow shingling pass runs
     # up to four times (the d14 rebuilt-relation lesson)
-    tall = (
-        shingle_rows(df, text_col, id_col, shingle_k)
-        .select("id", "shingle")
-        .persist()
+    tall = persist(
+        shingle_rows(df, text_col, id_col, shingle_k).select("id", "shingle")
     )
-    cached = [tall]
     sizes = tall.groupBy("id").agg(F.count(F.lit(1)).alias("set_size"))
     joinable = tall
     if max_df is not None:
@@ -1893,8 +1848,7 @@ def containment_pairs(
             .where(F.col("__df") > max_df)
             .select("shingle")
         )
-        joinable = tall.join(hot, on="shingle", how="left_anti").persist()
-        cached.append(joinable)
+        joinable = persist(tall.join(hot, on="shingle", how="left_anti"))
     left = joinable.select(
         F.col("id").alias("left_id"), "shingle"
     )
@@ -1921,7 +1875,7 @@ def containment_pairs(
         >= F.col("left_size").cast("decimal(20,6)")
         * F.lit(min_containment).cast("decimal(10,6)")
     )
-    result = out.select(
+    return out.select(
         "left_id",
         "right_id",
         "overlap",
@@ -1932,10 +1886,9 @@ def containment_pairs(
             6,
         ).alias("containment"),
     )
-    result._cached_intermediates = cached
-    return result
 
 
+@persisting
 def tfidf_cosine_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1998,8 +1951,7 @@ def tfidf_cosine_pairs(
         terms = shingle_rows(df, text_col, id_col, n).select(
             "id", F.col("shingle").alias("term"), F.lit(1).alias("tf")
         )
-    terms = terms.persist()
-    cached = [terms]
+    terms = persist(terms)
     n_docs = terms.select(F.countDistinct("id").alias("n_docs"))
     dfreq = terms.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
     idf = (
@@ -2018,16 +1970,13 @@ def tfidf_cosine_pairs(
     )
     # weighted postings over the pruned space, persisted: feeds the
     # norm aggregation AND both sides of the pair join
-    w = (
-        terms.join(idf, on="term")
-        .select(
+    w = persist(
+        terms.join(idf, on="term").select(
             "id",
             "term",
             (F.col("tf").cast("double") * F.col("idf")).alias("w"),
         )
-        .persist()
     )
-    cached.append(w)
     norms = (
         w.groupBy("id")
         .agg(
@@ -2043,7 +1992,7 @@ def tfidf_cosine_pairs(
     )
     pa = u.select(F.col("id").alias("id_a"), "term", F.col("u").alias("ua"))
     pb = u.select(F.col("id").alias("id_b"), "term", F.col("u").alias("ub"))
-    out = (
+    return (
         pa.join(pb, on="term")
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
@@ -2061,5 +2010,3 @@ def tfidf_cosine_pairs(
         )
         .where(F.col("cos") >= threshold)
     )
-    out._cached_intermediates = cached
-    return out

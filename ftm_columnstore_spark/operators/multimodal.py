@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ftm_columnstore_spark.lifecycle import persist, persisting
+
 MEDIA_META = StructType(
     [
         StructField("mime", StringType(), False),
@@ -306,6 +308,7 @@ def image_ahash(
     return media.select(id_col, payload_col).mapInPandas(batches, out_schema)
 
 
+@persisting
 def _fingerprint_pairs(
     hashed, bands: int, max_hamming: int, max_bucket: int
 ):
@@ -330,11 +333,9 @@ def _fingerprint_pairs(
             .alias(f"c{b}")
             for b in range(bands)
         ],
-    ).persist()
+    ).transform(persist)
     chunks.count()
-    out = hamming_pairs_from_chunks(chunks, bands, max_hamming, max_bucket)
-    out._cached_intermediates = [chunks]
-    return out
+    return hamming_pairs_from_chunks(chunks, bands, max_hamming, max_bucket)
 
 
 def image_dup_pairs(

@@ -15,11 +15,9 @@ cost grows with duplicate density (exact before near — collapsing exact
 copies first removed the adversarial-corpus blow-up in both the SimHash
 and Jaccard benchmarks).
 
-Everything stays lazy; the MinHash stage persists its banded relation
-for the self-join — the handle is propagated on the returned DataFrame
-(``_cached_intermediates``), so call
-:func:`~ftm_columnstore_spark.operators.dedup.unpersist_intermediates`
-on the pipeline result after your consuming action to release it.
+Everything stays lazy; the stages that persist a mid-relation follow
+:mod:`ftm_columnstore_spark.lifecycle` — consume the result inside a
+``scope()`` to release them.
 """
 
 from __future__ import annotations
@@ -27,7 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ftm_columnstore_spark.lifecycle import persisting
 
+
+@persisting
 def prepare_training_data(
     df: DataFrame,
     text_col: str = "text",
@@ -104,7 +105,6 @@ def prepare_training_data(
             F.col("id").alias(id_col)
         )
         out = out.join(keep_ids, on=id_col, how="left_semi")
-    pipeline_cached: list = []
     if decontaminate is not None:
         from ftm_columnstore_spark.operators.sketches import (
             bloom_ngram_decontaminate,
@@ -121,7 +121,6 @@ def prepare_training_data(
         hits = bloom_ngram_decontaminate(
             out, bench, text_col=text_col, id_col=id_col, **kwargs
         )
-        pipeline_cached += getattr(hits, "_cached_intermediates", [])
         dirty = hits.where(F.col("hit_rate") > max_hit_rate).select(
             F.col("id").alias(id_col)
         )
@@ -162,7 +161,6 @@ def prepare_training_data(
         c4_out = c4_line_filter(
             out, text_col=text_col, id_col=id_col, **c4_lines
         )
-        pipeline_cached += getattr(c4_out, "_cached_intermediates", [])
         filtered = c4_out.where(F.col("n_kept") > 0)
         out = out.drop(text_col).join(
             filtered.select(
@@ -174,7 +172,6 @@ def prepare_training_data(
         deduped_lines = line_dedup(
             out, text_col=text_col, id_col=id_col, sep=line_dedup_sep
         )
-        pipeline_cached += getattr(deduped_lines, "_cached_intermediates", [])
         cleaned = deduped_lines.where(F.col("n_kept") > 0)
         out = (
             out.drop(text_col)
@@ -193,13 +190,10 @@ def prepare_training_data(
             out, text_col=text_col, id_col=id_col, **substring_dedup
         )
         out = rewrite_cut_text(out, cut, text_col, id_col)
-    cached: list = []
     if near_dedup is not None:
         out = minhash_dedup(
             out, text_col=text_col, id_col=id_col, **near_dedup
         )
-        cached = getattr(out, "_cached_intermediates", [])
     if splits is not None:
         out = split_by_hash(out, splits, id_col=id_col, seed=seed)
-    out._cached_intermediates = pipeline_cached + cached
     return out

@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ftm_columnstore_spark.lifecycle import persisting
+
 
 def hash_key_col(id_col: Column | str, seed: str = "") -> Column:
     """First 8 lowercase-hex chars of md5(seed || id) — a uniform
@@ -651,6 +653,7 @@ def take_budget(
     )
 
 
+@persisting
 def split_by_cluster(
     df: DataFrame,
     clusters: DataFrame | None,

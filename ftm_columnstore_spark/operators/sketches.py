@@ -38,6 +38,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ftm_columnstore_spark.lifecycle import persist, persisting
+
 #: md5-60bit hash family (shared contract with operators/dedup.py —
 #: DuckDB mirror: ``('0x'||substr(md5(x),1,15))::BIGINT``)
 _HASH_BITS = 60
@@ -633,6 +635,7 @@ def word_ngrams(
     return rows.select(F.col("shingle").alias("gram"))
 
 
+@persisting
 def bloom_ngram_hits(
     corpus: DataFrame,
     bloom: DataFrame,
@@ -651,8 +654,8 @@ def bloom_ngram_hits(
     # join consume doc_grams — without it Catalyst re-runs the corpus
     # gram pass on each side. (id, gram) is already distinct — the
     # Arrow pass dedups within each document — so no extra shuffle
-    # here. Released via _cached_intermediates, the house contract.
-    doc_grams = word_ngrams(corpus, text_col, id_col, n).persist()
+    # here.
+    doc_grams = persist(word_ngrams(corpus, text_col, id_col, n))
     doc_grams.count()
     # one probe per DISTINCT gram (vocabulary-bounded), joined back to
     # the (id, gram) pairs — the md5 probe work never scales with
@@ -668,7 +671,7 @@ def bloom_ngram_hits(
             F.sum(F.col("might_contain").cast("long")).alias("n_hits"),
         )
     )
-    out = per_doc.where(F.col("n_hits") > 0).select(
+    return per_doc.where(F.col("n_hits") > 0).select(
         "id",
         "n_grams",
         "n_hits",
@@ -677,8 +680,6 @@ def bloom_ngram_hits(
             6,
         ).alias("hit_rate"),
     )
-    out._cached_intermediates = [doc_grams]
-    return out
 
 
 def bloom_ngram_decontaminate(
@@ -1083,6 +1084,7 @@ def moments_stats(sketch: DataFrame) -> DataFrame:
     )
 
 
+@persisting
 def ks_drift(
     a: DataFrame,
     b: DataFrame,
@@ -1133,10 +1135,9 @@ def ks_drift(
     counts = tagged.groupBy("v").agg(
         F.sum(F.when(F.col("side") == 0, 1).otherwise(0)).alias("ca"),
         F.sum(F.when(F.col("side") == 1, 1).otherwise(0)).alias("cb"),
-    ).persist()
+    ).transform(persist)
     lo, hi = counts.agg(F.min("v"), F.max("v")).first()
     if lo is None:
-        counts.unpersist()
         raise ValueError(f"ks_drift: no non-null values in column {col!r}")
     span = (hi - lo) or 1
     base = counts.withColumn(
@@ -1162,7 +1163,6 @@ def ks_drift(
         acc_b += r["sb"]
     tot_a, tot_b = acc_a, acc_b
     if tot_a == 0 or tot_b == 0:
-        counts.unpersist()
         raise ValueError(
             f"ks_drift: one side has no non-null values in {col!r}"
         )
@@ -1189,14 +1189,12 @@ def ks_drift(
         )
     )
     best = cum.orderBy(F.col("__diff").desc(), "v").limit(1)
-    out = best.select(
+    return best.select(
         F.round(F.col("__diff"), 6).alias("d_stat"),
         F.col("v").alias("at_value"),
         F.lit(tot_a).cast("long").alias("n_a"),
         F.lit(tot_b).cast("long").alias("n_b"),
     )
-    out._cached_intermediates = [counts]
-    return out
 
 
 def correlation_matrix(
@@ -1320,6 +1318,7 @@ def correlation_matrix(
     ).select("p.col_x", "p.col_y", "p.n", "p.corr")
 
 
+@persisting
 def ks_drift_by_group(
     df: DataFrame,
     col: str,
@@ -1368,17 +1367,15 @@ def ks_drift_by_group(
     base = df.where(c.isNotNull() & g.isNotNull()).select(
         g.alias("g"), c.alias("v")
     )
-    gv = base.groupBy("g", "v").agg(F.count(F.lit(1)).alias("cnt")).persist()
+    gv = persist(base.groupBy("g", "v").agg(F.count(F.lit(1)).alias("cnt")))
     groups = gv.select("g").distinct().limit(max_groups + 1).collect()
     if len(groups) > max_groups:
-        gv.unpersist()
         raise ValueError(
             f"{group_col!r} has more than max_groups={max_groups} groups; "
             "the groups x values eval cross would be unbounded — run "
             "ks_drift per suspect slice instead, or raise max_groups."
         )
     if len(groups) < 2:
-        gv.unpersist()
         raise ValueError(
             f"{group_col!r} has fewer than 2 distinct groups; leave-one-out "
             "drift is undefined (the rest-CDF denominator is zero)."
@@ -1390,7 +1387,6 @@ def ks_drift_by_group(
     # value-side grid guard: limit+1 count, same shape as the group
     # probe — never a full count of an unbounded relation
     if values.limit(max_distinct_values + 1).count() > max_distinct_values:
-        gv.unpersist()
         raise ValueError(
             f"{col!r} has more than max_distinct_values="
             f"{max_distinct_values} distinct values; the groups x values "
@@ -1418,7 +1414,7 @@ def ks_drift_by_group(
     # group); the GLOBAL cumulative needs no no-partition window —
     # cum_all(v) = Σ_g cum_g(v), a keyed aggregation of the same
     # relation (the a29 rule: never a single-partition global window)
-    cum_g_grid = joined.withColumn("cum_g", F.sum("cnt").over(w)).persist()
+    cum_g_grid = persist(joined.withColumn("cum_g", F.sum("cnt").over(w)))
     vcum = cum_g_grid.groupBy("v").agg(F.sum("cum_g").alias("cum_all"))
     cum = (
         cum_g_grid.join(vcum, on="v")
@@ -1441,12 +1437,10 @@ def ks_drift_by_group(
             F.struct((-F.col("d")).alias("nd"), F.col("v").alias("v"))
         ).alias("b")
     )
-    out = best.select(
+    return best.select(
         F.col("g").alias("group"),
         F.round(-F.col("b.nd"), 6).alias("d_stat"),
         F.col("b.v").alias("at_value"),
         F.col("n_g").cast("long").alias("n_group"),
         (F.col("n_all") - F.col("n_g")).cast("long").alias("n_rest"),
     )
-    out._cached_intermediates = [gv, cum_g_grid]
-    return out

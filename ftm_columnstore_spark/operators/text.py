@@ -10,6 +10,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ftm_columnstore_spark.functions.text import word_tokens_col
+from ftm_columnstore_spark.lifecycle import persist, persisting
 
 #: tiny per-language stopword marker sets for the n-gram/stopword heuristic.
 _LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -1096,6 +1097,7 @@ def _rake_arrow(
     return src.mapInPandas(gen, schema)
 
 
+@persisting
 def rake_keywords(
     df: DataFrame,
     stopwords: list[str],
@@ -1160,10 +1162,10 @@ def rake_keywords(
     # persist: three consumers (phrase lengths, the degree/freq join,
     # the phrase-score join) would otherwise each re-run the tokenize +
     # phrase-id window pass (the d14 rebuilt-relation lesson)
-    words = (
-        marked.where(F.col("is_stop") == 0)
-        .select("id", "phrase_id", "pos", "term")
-        .persist()
+    words = persist(
+        marked.where(F.col("is_stop") == 0).select(
+            "id", "phrase_id", "pos", "term"
+        )
     )
     plen = words.groupBy("id", "phrase_id").agg(
         F.count(F.lit(1)).alias("plen")
@@ -1209,13 +1211,11 @@ def rake_keywords(
     w_rank = Window.partitionBy("id").orderBy(
         F.col("score").desc(), F.col("phrase"), F.col("phrase_id")
     )
-    out = (
+    return (
         scored.withColumn("rn", F.row_number().over(w_rank))
         .where(F.col("rn") <= top_k)
         .select("id", "phrase", "score", "n_words")
     )
-    out._cached_intermediates = [words]
-    return out
 
 
 def vocab_divergence(
@@ -1293,6 +1293,7 @@ def vocab_divergence(
     )
 
 
+@persisting
 def ngram_novelty(
     df: DataFrame,
     text_col: str = "text",
@@ -1319,10 +1320,8 @@ def ngram_novelty(
     n_grams, one correctly-rounded division, 6 dp."""
     from ftm_columnstore_spark.functions.text import shingle_rows
 
-    tall = (
-        shingle_rows(df, text_col, id_col, n)
-        .select("id", "shingle")
-        .persist()
+    tall = persist(
+        shingle_rows(df, text_col, id_col, n).select("id", "shingle")
     )
     n_grams = tall.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_grams")
@@ -1334,7 +1333,7 @@ def ngram_novelty(
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("n_novel"))
     )
-    out = (
+    return (
         n_grams.join(novel, on="id", how="left")
         .withColumn("n_novel", F.coalesce(F.col("n_novel"), F.lit(0)))
         .select(
@@ -1348,10 +1347,9 @@ def ngram_novelty(
             ).alias("novelty"),
         )
     )
-    out._cached_intermediates = [tall]
-    return out
 
 
+@persisting
 def pmi_collocations(
     df: DataFrame,
     text_col: str = "text",
@@ -1396,11 +1394,10 @@ def pmi_collocations(
     # join sides — 5 corpus scans at explain, the d14 rebuilt-relation
     # lesson); both are vocabulary-/surviving-pair-bounded, never
     # corpus-sized
-    uni = (
+    uni = persist(
         toks.select(F.explode("__t").alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt_t"))
-        .persist()
     )
     # Adjacent pairs built inside the row: element i pairs with i+1.
     pairs_col = F.when(
@@ -1418,12 +1415,11 @@ def pmi_collocations(
     # filtering first shifts every PMI up by ln(N_all/N_surviving)
     # (ADVICE r5). big_all is vocabulary²-bounded (distinct pairs),
     # never corpus-sized; it feeds both the total and the filter.
-    big_all = (
+    big_all = persist(
         toks.select(F.explode(pairs_col).alias("p"))
         .select("p.w1", "p.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
     big = big_all.where(F.col("cnt") >= int(min_count))
     totals = uni.agg(F.sum("cnt_t").alias("n_uni")).crossJoin(
@@ -1445,17 +1441,16 @@ def pmi_collocations(
         * F.col("c1").cast("double")
         * F.col("c2").cast("double")
     )
-    out = (
+    return (
         j.select(
             "w1", "w2", "cnt", F.round(F.log(ratio), 12).alias("pmi")
         )
         .orderBy(F.col("pmi").desc(), "w1", "w2")
         .limit(int(top_n))
     )
-    out._cached_intermediates = [uni, big_all]
-    return out
 
 
+@persisting
 def idf_rarity(
     df: DataFrame,
     text_col: str = "text",
@@ -1480,13 +1475,11 @@ def idf_rarity(
     (partition-order-independent), one final division rounded 6 dp.
 
     Output: (id, n_tokens, idf_rarity)."""
-    tall = (
-        df.where(F.col(text_col).isNotNull())
-        .select(
+    tall = persist(
+        df.where(F.col(text_col).isNotNull()).select(
             F.col(id_col).alias("id"),
             F.explode(word_tokens_col(text_col)).alias("token"),
         )
-        .persist()
     )
     n_docs = df.where(F.col(text_col).isNotNull()).select(
         F.countDistinct(id_col).alias("n_docs")
@@ -1508,7 +1501,7 @@ def idf_rarity(
         .cast("decimal(28,12)")
         .alias("__idf"),
     )
-    out = (
+    return (
         tall.join(idf, on="token")
         .groupBy("id")
         .agg(
@@ -1525,8 +1518,6 @@ def idf_rarity(
             ).alias("idf_rarity"),
         )
     )
-    out._cached_intermediates = [tall]
-    return out
 
 
 def char_entropy(

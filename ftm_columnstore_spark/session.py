@@ -60,7 +60,10 @@ def get_spark(
         # dependent: single-job sessions are unaffected (one job is
         # trivially fair), and on a cluster the same config governs
         # multi-tenant drivers. Override via extra_conf if a caller
-        # wants strict FIFO.
+        # wants strict FIFO. No allocation file is needed: on pyspark
+        # 4.1.2 the `default` pool's own schedulingMode is FAIR too.
+        # Mixed latency classes on a shared cluster would want named
+        # pools (spark.scheduler.pool per submitting thread).
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.autoBroadcastJoinThreshold", "32m")
         .config(

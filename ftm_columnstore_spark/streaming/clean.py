@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ftm_columnstore_spark.streaming.release import unpersist_on_termination
+from ftm_columnstore_spark.lifecycle import persist, scope
+from ftm_columnstore_spark.streaming.release import released_on_termination
 
 
 def _write_batch(out: DataFrame, out_path: str, batch_id: int) -> None:
@@ -39,6 +40,7 @@ def _write_batch(out: DataFrame, out_path: str, batch_id: int) -> None:
     )
 
 
+@released_on_termination
 def stream_clean_against_corpus(
     spark: SparkSession,
     source_path: str,
@@ -112,7 +114,6 @@ def stream_clean_against_corpus(
         train_bigram_lm,
     )
 
-    cached = []
     weights = None
     min_score = 0.0
     if classifier is not None:
@@ -121,23 +122,20 @@ def stream_clean_against_corpus(
         min_score = float(copts.pop("min_score", 0.0))
         if copts:
             raise ValueError(f"unknown classifier options: {sorted(copts)}")
-        weights = weights.persist()
+        weights = persist(weights)
         weights.count()  # build at stream start, not first batch
-        cached.append(weights)
     lm = None
     if max_bits_per_bigram is not None:
         c2, c1, vocab = train_bigram_lm(corpus, text_col, id_col)
-        c2, c1 = c2.persist(), c1.persist()
+        c2, c1 = persist(c2), persist(c1)
         c2.count(), c1.count()  # build indexes at stream start
-        cached += [c2, c1]
         lm = (c2, c1, vocab)
     grams = None
     if substring_k is not None:
         grams = corpus_gram_index(
             corpus, text_col, id_col, substring_k
-        ).persist()
+        ).transform(persist)
         grams.count()  # build the index at stream start, not first batch
-        cached.append(grams)
     bloom_words = None
     dc_n, dc_m, dc_k, dc_max = 3, 1 << 16, 2, 0.0
     if decontaminate is not None:
@@ -156,9 +154,8 @@ def stream_clean_against_corpus(
             raise ValueError(f"unknown decontaminate options: {sorted(dc)}")
         bloom_words = bloom_build(
             word_ngrams(dc_bench, text_col, None, dc_n), "gram", dc_m, dc_k
-        ).persist()
+        ).transform(persist)
         bloom_words.count()  # build the filter at stream start
-        cached.append(bloom_words)
     banded = None
     nd = dict(near_dedup or {})
     allowed = {"num_hashes", "num_bands", "shingle_k", "min_jaccard_est"}
@@ -178,11 +175,10 @@ def stream_clean_against_corpus(
                 nd.get("shingle_k", 3),
             ),
             nd.get("num_bands", 8),
-        ).persist()
+        ).transform(persist)
         # eager: the per-batch cross pairing reads it twice (band join +
         # signature join-back) — build once at stream start
         banded.count()
-        cached.append(banded)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # Each stage builds a kill-set subquery FROM ``out`` and then
@@ -193,16 +189,11 @@ def stream_clean_against_corpus(
         # every branch to one upstream computation: measured 1.6x on
         # the 1M-doc soak drain (1215s -> 760s; steady batch wall
         # ~120s -> ~80s per 100k-doc batch) with byte-identical
-        # survivors. Per-batch cache is released before return.
-        batch_cached: list[DataFrame] = []
-
-        def staged(df: DataFrame) -> DataFrame:
-            df = df.persist()
-            batch_cached.append(df)
-            return df
-
-        out = staged(batch_df)
-        try:
+        # survivors. The scope releases the per-batch cache even when
+        # the batch write fails: a retried micro-batch must not stack
+        # persisted frames.
+        with scope():
+            out = persist(batch_df)
             if out.isEmpty():
                 return
             if quality is not None:
@@ -212,7 +203,7 @@ def stream_clean_against_corpus(
                 keep = gate.where(F.col("keep")).select(
                     F.col("id").alias(id_col)
                 )
-                out = staged(out.join(keep, on=id_col, how="left_semi"))
+                out = persist(out.join(keep, on=id_col, how="left_semi"))
             if bloom_words is not None:
                 # contamination drop EARLY (map-side broadcast probe — the
                 # cheapest reference-artifact stage) so contaminated docs
@@ -227,7 +218,7 @@ def stream_clean_against_corpus(
                 dirty = hits.where(F.col("hit_rate") > dc_max).select(
                     F.col("id").alias(id_col)
                 )
-                out = staged(out.join(dirty, on=id_col, how="left_anti"))
+                out = persist(out.join(dirty, on=id_col, how="left_anti"))
             if weights is not None:
                 from ftm_columnstore_spark.operators.text import (
                     score_quality_classifier,
@@ -237,13 +228,13 @@ def stream_clean_against_corpus(
                 low = nb.where(F.col("nb_score") < min_score).select(
                     F.col("id").alias(id_col)
                 )
-                out = staged(out.join(low, on=id_col, how="left_anti"))
+                out = persist(out.join(low, on=id_col, how="left_anti"))
             if lm is not None:
                 scored = score_with_bigram_lm(out, lm, text_col, id_col)
                 bad = scored.where(
                     F.col("bits_per_bigram") > max_bits_per_bigram
                 ).select(F.col("id").alias(id_col))
-                out = staged(out.join(bad, on=id_col, how="left_anti"))
+                out = persist(out.join(bad, on=id_col, how="left_anti"))
             if banded is not None:
                 # near-dup drop BEFORE the span cut: a document fully
                 # contained in the corpus would otherwise be cut down to
@@ -265,7 +256,7 @@ def stream_clean_against_corpus(
                     .select(F.col("new_id").alias(id_col))
                     .distinct()
                 )
-                out = staged(out.join(dup_ids, on=id_col, how="left_anti"))
+                out = persist(out.join(dup_ids, on=id_col, how="left_anti"))
             if grams is not None:
                 from ftm_columnstore_spark.operators.dedup import (
                     exact_substring_dedup_cross,
@@ -282,11 +273,6 @@ def stream_clean_against_corpus(
                 )
                 out = rewrite_cut_text(out, cut, text_col, id_col)
             _write_batch(out, out_path, batch_id)
-        finally:
-            # released even when the batch write fails: a retried
-            # micro-batch must not stack persisted frames
-            for df in batch_cached:
-                df.unpersist()
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -297,7 +283,4 @@ def stream_clean_against_corpus(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    # LM counts / gram index / banded signatures are unpersisted when
-    # the stream terminates; also reachable for early manual release
-    return unpersist_on_termination(spark, query, cached)
+    return writer.start()

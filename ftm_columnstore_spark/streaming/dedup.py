@@ -31,15 +31,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ftm_columnstore_spark.streaming.release import unpersist_on_termination
-
+from ftm_columnstore_spark.lifecycle import persist, scope
 from ftm_columnstore_spark.operators.dedup import (
     _band_relation,
     cross_pairs_from_banded,
     minhash_signature,
 )
+from ftm_columnstore_spark.streaming.release import released_on_termination
 
 
+@released_on_termination
 def stream_dedup_against_corpus(
     spark: SparkSession,
     source_path: str,
@@ -65,7 +66,7 @@ def stream_dedup_against_corpus(
     corpus_banded = _band_relation(
         minhash_signature(corpus, text_col, id_col, num_hashes, shingle_k),
         num_bands,
-    ).persist()
+    ).transform(persist)
     # eager: build the index NOW, once — a lazy persist would make the
     # first micro-batch's two consumers (band join + signature join-back)
     # race to compute the corpus lineage concurrently
@@ -97,14 +98,10 @@ def stream_dedup_against_corpus(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    # the persisted index is released automatically when the stream
-    # terminates (normal stop or failure); it also stays reachable on
-    # query._cached_intermediates for early manual release — same
-    # caching contract as the batch pair operators
-    return unpersist_on_termination(spark, query, [corpus_banded])
+    return writer.start()
 
 
+@released_on_termination
 def stream_substring_cut_against_corpus(
     spark: SparkSession,
     source_path: str,
@@ -138,21 +135,21 @@ def stream_substring_cut_against_corpus(
         exact_substring_dedup_cross,
     )
 
-    grams = corpus_gram_index(corpus, text_col, id_col, k).persist()
+    grams = persist(corpus_gram_index(corpus, text_col, id_col, k))
     grams.count()  # build the index at stream start, not first batch
 
     def process(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        cleaned = exact_substring_dedup_cross(
-            batch_df,
-            corpus_grams=grams,
-            text_col=text_col,
-            id_col=id_col,
-            k=k,
-            within_batch=within_batch,
-        )
-        cleaned.write.mode("append").parquet(out_path)
+        with scope():
+            exact_substring_dedup_cross(
+                batch_df,
+                corpus_grams=grams,
+                text_col=text_col,
+                id_col=id_col,
+                k=k,
+                within_batch=within_batch,
+            ).write.mode("append").parquet(out_path)
 
     docs = spark.readStream.schema(schema).json(source_path)
     writer = (
@@ -161,5 +158,4 @@ def stream_substring_cut_against_corpus(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    return unpersist_on_termination(spark, query, [grams])
+    return writer.start()

@@ -1,57 +1,58 @@
-"""Release persisted reference artifacts when a stream terminates.
-
-The corpus-index streams (streaming/clean.py, streaming/dedup.py)
-persist reference relations — LM counts, gram indexes, banded
-signatures — for the life of the StreamingQuery. Without cleanup those
-stay cached for the life of the SESSION once the query stops, leaking
-executor storage every time a stream is restarted with a refreshed
-index. This registers a StreamingQueryListener scoped to one query id
-that unpersists the artifacts on termination (normal stop or failure)
-and then deregisters itself.
-
-The cached list also stays reachable on ``query._cached_intermediates``
-for callers that want to release earlier by hand.
+"""Release a stream's persisted reference artifacts when its query
+terminates — the streaming rule of :mod:`ftm_columnstore_spark.lifecycle`.
+Without it the LM counts, gram indexes and banded signatures of the
+corpus-index streams (streaming/clean.py, streaming/dedup.py) would stay
+cached for the life of the SESSION, leaking executor storage every time
+a stream restarts with a refreshed index.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+import functools
+
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
+from ftm_columnstore_spark.lifecycle import detached
 
-def unpersist_on_termination(
-    spark: SparkSession, query: StreamingQuery, cached: list[DataFrame]
-) -> StreamingQuery:
-    """Unpersist ``cached`` when ``query`` terminates; returns the query
-    with ``_cached_intermediates`` attached."""
-    query._cached_intermediates = cached
-    if not cached:
+
+def released_on_termination(start):
+    """Decorate a stream starter ``start(spark, ...) -> StreamingQuery``:
+    its persists live until the query terminates, or are released at
+    once if the start raises."""
+
+    @functools.wraps(start)
+    def run(spark, *args, **kwargs):
+        with detached() as cached:
+            query = start(spark, *args, **kwargs)
+            if cached:
+                spark.streams.addListener(_Release(spark, query.id, cached))
         return query
-    qid = str(query.id)
 
-    class _Release(StreamingQueryListener):
-        def onQueryStarted(self, event) -> None:
-            pass
+    return run
 
-        def onQueryProgress(self, event) -> None:
-            pass
 
-        def onQueryIdle(self, event) -> None:
-            pass
+class _Release(StreamingQueryListener):
+    def __init__(self, spark, query_id, cached) -> None:
+        self._session, self._qid, self._cached = spark, str(query_id), cached
 
-        def onQueryTerminated(self, event) -> None:
-            if str(event.id) != qid:
-                return
-            for df in cached:
-                try:
-                    df.unpersist()
-                except Exception:  # noqa: BLE001 — releasing best-effort
-                    pass
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        if str(event.id) != self._qid:
+            return
+        for df in self._cached:
             try:
-                spark.streams.removeListener(self)
-            except Exception:  # noqa: BLE001
+                df.unpersist()
+            except Exception:  # noqa: BLE001 — releasing best-effort
                 pass
-
-    spark.streams.addListener(_Release())
-    return query
+        try:
+            self._session.streams.removeListener(self)
+        except Exception:  # noqa: BLE001
+            pass

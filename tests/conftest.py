@@ -33,6 +33,14 @@ def spark() -> SparkSession:
     yield spark
 
 
+@pytest.fixture
+def cache_empty(spark):
+    """Clear the session-wide cache, then return a probe for whether
+    Spark's CacheManager is empty again."""
+    spark.catalog.clearCache()
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty
+
+
 def entity(id, schema, dataset, **props):
     return {
         "id": id,

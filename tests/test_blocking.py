@@ -176,6 +176,33 @@ def test_connected_components_edges_deduped_flag(spark):
         assert cmap == expected, thr
 
 
+def test_connected_components_small_graph_releases_edges(spark, cache_empty):
+    """The small-graph path reads its persisted edge relation only for
+    the collect, so it releases it before returning, scope or not; the
+    star path's relation goes with the caller's scope. Labels agree."""
+    from ftm_columnstore_spark.lifecycle import scope
+
+    edges = spark.createDataFrame(
+        [("m1", "m2"), ("m2", "m3"), ("m3", "m1"), ("p", "q"), ("q", "q")],
+        ["left_id", "right_id"],
+    )
+    small = {
+        r["entity_id"]: r["canonical_id"]
+        for r in connected_components(edges).collect()
+    }
+    assert cache_empty()
+    with scope():
+        star = {
+            r["entity_id"]: r["canonical_id"]
+            for r in connected_components(
+                edges, small_graph_threshold=0
+            ).collect()
+        }
+    assert cache_empty()
+    assert small == star
+    assert small == {"m1": "m1", "m2": "m1", "m3": "m1", "p": "p", "q": "p"}
+
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 

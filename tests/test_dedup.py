@@ -223,24 +223,20 @@ def test_simhash_param_validation(spark, docs_df=None):
         simhash_pairs_portable(df, bands=4, max_hamming=4)
 
 
-def test_unpersist_intermediates_releases_cache(spark):
+def test_scope_releases_pair_intermediates(spark, cache_empty):
     """Pair operators persist a mid-relation for their self-join; the
     documented release path must actually clear it."""
-    from ftm_columnstore_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        unpersist_intermediates,
-    )
+    from ftm_columnstore_spark.lifecycle import scope
+    from ftm_columnstore_spark.operators.dedup import ngram_jaccard_pairs
 
     df = spark.createDataFrame(
         [(1, "one two three four five six"), (2, "one two three four five seven")],
         "doc_id long, text string",
     )
-    out = ngram_jaccard_pairs(df, shingle_k=2, min_jaccard=0.2)
-    out.count()
-    cached = out._cached_intermediates
-    assert cached and any(c.storageLevel.useMemory for c in cached)
-    unpersist_intermediates(out)
-    assert all(not c.storageLevel.useMemory for c in cached)
+    with scope():
+        ngram_jaccard_pairs(df, shingle_k=2, min_jaccard=0.2).count()
+        assert not cache_empty()
+    assert cache_empty()
 
 
 def test_line_dedup(spark):
@@ -328,11 +324,11 @@ def test_semantic_dedup_empty_centroids(spark):
     assert semantic_dedup_portable(df).count() == 0
 
 
-def test_minhash_lsh_pairs_cross(spark):
+def test_minhash_lsh_pairs_cross(spark, cache_empty):
+    from ftm_columnstore_spark.lifecycle import scope
     from ftm_columnstore_spark.operators.dedup import (
         minhash_lsh_pairs_cross,
         minhash_signature,
-        unpersist_intermediates,
     )
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
@@ -344,17 +340,17 @@ def test_minhash_lsh_pairs_cross(spark):
         [(1, base), (2, base + " tomorrow"), (3, "unrelated corpus entry")],
         "doc_id long, text string",
     )
-    pairs = minhash_lsh_pairs_cross(
-        minhash_signature(new, num_hashes=32, shingle_k=3),
-        minhash_signature(corpus, num_hashes=32, shingle_k=3),
-        num_bands=8,
-    )
-    rows = pairs.collect()
+    with scope():
+        rows = minhash_lsh_pairs_cross(
+            minhash_signature(new, num_hashes=32, shingle_k=3),
+            minhash_signature(corpus, num_hashes=32, shingle_k=3),
+            num_bands=8,
+        ).collect()
+    assert cache_empty()
     got = {(r.new_id, r.corpus_id): r.jaccard_est for r in rows}
     assert (100, 1) in got and got[(100, 1)] == 1.0
     # direction is strictly new → corpus; no within-set pairs possible
     assert all(nid >= 100 and cid < 100 for nid, cid in got)
-    unpersist_intermediates(pairs)
 
 
 def test_dedup_keep_best(spark):

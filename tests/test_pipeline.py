@@ -47,10 +47,10 @@ def test_pipeline_composition(spark):
     assert all(r["n_tokens"] > 20 for r in out)
 
 
-def test_prepare_training_data(spark):
+def test_prepare_training_data(spark, cache_empty):
     """Packaged pipeline: gate → line dedup → exact dedup → near dedup →
     split, with each stage's effect visible in the survivors."""
-    from ftm_columnstore_spark.operators.dedup import unpersist_intermediates
+    from ftm_columnstore_spark.lifecycle import scope
     from ftm_columnstore_spark.operators.pipeline import prepare_training_data
 
     boiler = "standard footer line with the usual and boring legal words"
@@ -63,19 +63,20 @@ def test_prepare_training_data(spark):
             "the way it runs queries over the very large datasets it reads"),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = prepare_training_data(
-        docs,
-        quality={"min_tokens": 10, "min_stopwords": 2},
-        near_dedup={"num_hashes": 16, "num_bands": 8, "threshold": 0.5},
-        splits={"train": 0.5, "test": 0.5},
-        seed="p",
-    )
-    got = {r.doc_id: r for r in out.collect()}
+    with scope():
+        out = prepare_training_data(
+            docs,
+            quality={"min_tokens": 10, "min_stopwords": 2},
+            near_dedup={"num_hashes": 16, "num_bands": 8, "threshold": 0.5},
+            splits={"train": 0.5, "test": 0.5},
+            seed="p",
+        )
+        got = {r.doc_id: r for r in out.collect()}
+    assert cache_empty()
     assert set(got) == {1, 5}
     # line dedup kept the boilerplate only in the globally-first doc
     assert boiler in got[1].text and GOOD in got[1].text
     assert got[1].split in ("train", "test")
-    unpersist_intermediates(out)
 
 
 def test_prepare_training_data_substring_and_perplexity(spark):
@@ -255,13 +256,14 @@ def test_pipeline_c4_lines_stage(spark):
     assert out[0]["text"] == "A good proper sentence here."
 
 
-def test_pipeline_decontaminate_stage(spark):
+def test_pipeline_decontaminate_stage(spark, cache_empty):
     """Batch decontamination mirrors the streaming stage: docs sharing
     an n-gram with the bench set drop, clean docs survive untouched;
-    unknown options raise; the bench gram relation is released via the
-    caching contract."""
+    unknown options raise; the stage's persisted doc grams are released
+    with the caller's scope."""
     import pytest
 
+    from ftm_columnstore_spark.lifecycle import scope
     from ftm_columnstore_spark.operators.pipeline import (
         prepare_training_data,
     )
@@ -277,15 +279,16 @@ def test_pipeline_decontaminate_stage(spark):
         [(9, "the secret benchmark passage nobody should train on")],
         "doc_id: long, text: string",
     )
-    out = prepare_training_data(
-        docs,
-        decontaminate={"bench": bench, "n": 3, "m_bits": 1 << 12, "k": 2},
-        line_dedup_sep=None,
-    )
-    assert [r["doc_id"] for r in out.collect()] == [2]
-    assert getattr(out, "_cached_intermediates", [])
-    for c in out._cached_intermediates:
-        c.unpersist()
+    with scope():
+        out = prepare_training_data(
+            docs,
+            decontaminate={"bench": bench, "n": 3, "m_bits": 1 << 12, "k": 2},
+            line_dedup_sep=None,
+        )
+        assert [r["doc_id"] for r in out.collect()] == [2]
+        # the stage's persisted doc grams live until the scope exits
+        assert not cache_empty()
+    assert cache_empty()
 
     with pytest.raises(ValueError, match="decontaminate"):
         prepare_training_data(

@@ -378,13 +378,16 @@ def test_stream_dedup_against_corpus(spark, tmp_path):
     assert kept == [102]
 
 
-def test_stream_substring_cut_against_corpus(spark, tmp_path):
+def test_stream_substring_cut_against_corpus(spark, tmp_path, cache_empty):
     """Micro-batch documents lose the spans already present in the
-    static corpus; novel text is untouched."""
+    static corpus; novel text is untouched. The persisted corpus index
+    outlives the caller scope the stream was started in and is released
+    when the query terminates."""
     import json
 
     from pyspark.sql import types as T
 
+    from ftm_columnstore_spark.lifecycle import scope
     from ftm_columnstore_spark.streaming.dedup import (
         stream_substring_cut_against_corpus,
     )
@@ -409,34 +412,36 @@ def test_stream_substring_cut_against_corpus(spark, tmp_path):
         ]
     )
     out = tmp_path / "cleaned"
-    q = stream_substring_cut_against_corpus(
-        spark,
-        str(src),
-        corpus,
-        str(out),
-        str(tmp_path / "ckpt_ss"),
-        schema,
-        k=8,
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    rows = {r["id"]: r for r in spark.read.parquet(str(out)).collect()}
-    # byte-preserving span cut keeps the separators around the span
-    assert rows[100]["text"] == "intro  outro"
-    assert rows[100]["n_removed"] == 10
-    assert rows[101]["n_removed"] == 0
-
-    # the persisted corpus gram index is released once the stream
-    # terminates (listener fires asynchronously — poll briefly)
+    with scope():
+        q = stream_substring_cut_against_corpus(
+            spark,
+            str(src),
+            corpus,
+            str(out),
+            str(tmp_path / "ckpt_ss"),
+            schema,
+            k=8,
+        )
+    try:
+        q.processAllAvailable()
+        rows = {r["id"]: r for r in spark.read.parquet(str(out)).collect()}
+        # byte-preserving span cut keeps the separators around the span
+        assert rows[100]["text"] == "intro  outro"
+        assert rows[100]["n_removed"] == 10
+        assert rows[101]["n_removed"] == 0
+        # the index is still cached while the query runs
+        assert not cache_empty()
+    finally:
+        q.stop()
+    # released once the stream terminates (listener fires
+    # asynchronously — poll briefly)
     import time
 
-    cached = q._cached_intermediates
-    assert cached
     for _ in range(100):
-        if all(not c.is_cached for c in cached):
+        if cache_empty():
             break
         time.sleep(0.2)
-    assert all(not c.is_cached for c in cached)
+    assert cache_empty()
 
 
 def test_stream_clean_against_corpus(spark, tmp_path):

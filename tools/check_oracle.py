@@ -4,7 +4,10 @@
     PYTHONPATH=/root/repo python tools/check_oracle.py [sf_dir]
 
 Compares row count, sorted column names, and order-insensitive values
-(floats to 1e-9 relative). Exits non-zero on any mismatch.
+(floats to 1e-9 relative). Each query runs inside a lifecycle scope, and
+the session must end with an empty CacheManager: a persisted
+intermediate that outlives its query is a leak. Exits non-zero on any
+mismatch or leak.
 """
 
 from __future__ import annotations
@@ -72,6 +75,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry_mod
+    from ftm_columnstore_spark.lifecycle import scope
     from ftm_columnstore_spark.session import get_spark
 
     spark = get_spark("oracle-check")
@@ -86,8 +90,8 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            spark_pdf = sdf.toPandas()
+            with scope():
+                spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {exc}")
             failures += 1
@@ -108,7 +112,9 @@ def main() -> int:
         else:
             print(f"ok   {name}: {len(spark_pdf)} rows match")
     print(f"\n{len(queries) - failures}/{len(queries)} ok")
-    return 1 if failures else 0
+    cache_empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    print(f"CacheManager empty: {cache_empty}")
+    return 1 if failures or not cache_empty else 0
 
 
 if __name__ == "__main__":

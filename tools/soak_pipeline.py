@@ -66,8 +66,8 @@ def main() -> None:
         exact_substring_dedup,
         line_dedup,
         minhash_dedup,
-        unpersist_intermediates,
     )
+    from ftm_columnstore_spark.lifecycle import scope
     from ftm_columnstore_spark.operators.pipeline import (
         prepare_training_data,
     )
@@ -110,9 +110,8 @@ def main() -> None:
         )
 
         def near():
-            out = minhash_dedup(docs)
-            materialize(out)
-            unpersist_intermediates(out)
+            with scope():
+                materialize(minhash_dedup(docs))
 
         s["minhash_dedup"] = timed(near)
         s["split_by_hash"] = timed(
@@ -123,17 +122,18 @@ def main() -> None:
         if factor == SCALES[-1]:
 
             def full():
-                out = prepare_training_data(
-                    docs,
-                    quality={"min_tokens": 5},
-                    perplexity={},
-                    line_dedup_sep="\n",
-                    substring_dedup={"k": 8},
-                    near_dedup={},
-                    splits={"train": 0.9, "val": 0.1},
-                )
-                materialize(out)
-                unpersist_intermediates(out)
+                with scope():
+                    materialize(
+                        prepare_training_data(
+                            docs,
+                            quality={"min_tokens": 5},
+                            perplexity={},
+                            line_dedup_sep="\n",
+                            substring_dedup={"k": 8},
+                            near_dedup={},
+                            splits={"train": 0.9, "val": 0.1},
+                        )
+                    )
 
             row["full_pipeline"] = timed(full)
         spark.catalog.clearCache()
