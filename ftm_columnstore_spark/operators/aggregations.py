@@ -49,35 +49,40 @@ def stats(
     statements: DataFrame, dataset: str | list[str] | None = None
 ) -> dict[str, Any]:
     """``view.stats()`` report: entity count, per-schema counts, per-country
-    counts (reference golden ``tests/test_store.py:129-142``)."""
+    counts (reference golden ``tests/test_store.py:129-142``).
+
+    One aggregation, one action: every statement is tagged with the
+    (report, key) rows it counts towards — the entity total, its schema,
+    and its value when it is a country — and one distinct count of
+    canonical_id per tag serves all three reports."""
     df = statements
     if isinstance(dataset, str):
         df = df.filter(F.col("dataset") == dataset)
     elif dataset is not None:
         df = df.filter(F.col("dataset").isin(list(dataset)))
-    df = df.cache()
-    try:
-        entity_count = df.select("canonical_id").distinct().count()
-        schemata = {
-            r["schema"]: r["n"]
-            for r in df.groupBy("schema")
-            .agg(F.countDistinct("canonical_id").alias("n"))
-            .collect()
-        }
-        countries = {
-            r["value"]: r["n"]
-            for r in df.filter(F.col("prop_type") == "country")
-            .groupBy("value")
-            .agg(F.countDistinct("canonical_id").alias("n"))
-            .collect()
-        }
-    finally:
-        df.unpersist()
-    return {
-        "entity_count": entity_count,
-        "schemata": schemata,
-        "countries": countries,
-    }
+
+    def tag(report: str, key: F.Column) -> F.Column:
+        return F.struct(F.lit(report).alias("report"), key.alias("key"))
+
+    tags = F.array(
+        tag("entity_count", F.lit(None).cast("string")),
+        tag("schemata", F.col("schema")),
+        F.when(F.col("prop_type") == "country", tag("countries", F.col("value"))),
+    )
+    rows = (
+        df.select("canonical_id", F.explode(tags).alias("t"))
+        .where(F.col("t").isNotNull())
+        .groupBy("t.report", "t.key")
+        .agg(F.countDistinct("canonical_id").alias("n"))
+        .collect()
+    )
+    out: dict[str, Any] = {"entity_count": 0, "schemata": {}, "countries": {}}
+    for r in rows:
+        if r["report"] == "entity_count":
+            out["entity_count"] = r["n"]
+        else:
+            out[r["report"]][r["key"]] = r["n"]
+    return out
 
 
 def snapshot_diff(

@@ -24,6 +24,9 @@ mega-entities is split by AQE. Semantics implemented columnar:
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -59,14 +62,23 @@ def _caption_expr() -> F.Column:
     return expr
 
 
+@functools.cache
+def _constants(gateway) -> tuple[F.Column, F.Column]:
+    """(:func:`_schema_rank`, :func:`_caption_expr`). Building them takes
+    about 200 py4j calls, and the Columns are JVM objects that any plan
+    may share, so they are built once per JVM gateway."""
+    return _schema_rank(), _caption_expr()
+
+
 def assemble_entities(statements: DataFrame) -> DataFrame:
     """statements → entity DataFrame (ENTITY_SCHEMA shape)."""
+    schema_rank, caption = _constants(SparkContext._gateway)
     per_prop = statements.groupBy("canonical_id", "prop").agg(
         F.sort_array(F.collect_set("value")).alias("values"),
         F.collect_set("dataset").alias("ds"),
         F.collect_set("entity_id").alias("eids"),
         F.max(
-            F.struct(_schema_rank().alias("d"), F.col("schema").alias("s"))
+            F.struct(schema_rank.alias("d"), F.col("schema").alias("s"))
         ).alias("schema_rank"),
     )
 
@@ -90,7 +102,7 @@ def assemble_entities(statements: DataFrame) -> DataFrame:
 
     return entities.select(
         F.col("canonical_id").alias("id"),
-        _caption_expr().alias("caption"),
+        caption.alias("caption"),
         "schema",
         "properties",
         "datasets",

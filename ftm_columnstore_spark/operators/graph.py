@@ -24,6 +24,17 @@ def _reverse_prop_expr(col: str = "prop") -> F.Column:
     return F.coalesce(mapping[F.col(col)], F.concat(F.col(col), F.lit("Reverse")))
 
 
+def _incoming(statements: DataFrame, value_id: str) -> DataFrame:
+    """:func:`inverted` before its distinct: one row per referencing
+    statement."""
+    return statements.filter(
+        (F.col("prop_type") == "entity") & (F.col("value") == value_id)
+    ).select(
+        _reverse_prop_expr().alias("prop"),
+        F.col("canonical_id").alias("entity_id"),
+    )
+
+
 def inverted(statements: DataFrame, value_id: str) -> DataFrame:
     """Incoming edges of ``value_id``: statements whose ``prop_type='entity'``
     value references it, with the reversed FtM prop name
@@ -31,16 +42,7 @@ def inverted(statements: DataFrame, value_id: str) -> DataFrame:
 
     Returns (reversed_prop, referencing_canonical_id).
     """
-    return (
-        statements.filter(
-            (F.col("prop_type") == "entity") & (F.col("value") == value_id)
-        )
-        .select(
-            _reverse_prop_expr().alias("prop"),
-            F.col("canonical_id").alias("entity_id"),
-        )
-        .distinct()
-    )
+    return _incoming(statements, value_id).distinct()
 
 
 def reverse_ids(statements: DataFrame, value_id: str) -> DataFrame:
@@ -111,21 +113,18 @@ def adjacent(statements: DataFrame, entity_id: str) -> DataFrame:
     mine = statements.filter(
         (F.col("canonical_id") == entity_id) | (F.col("entity_id") == entity_id)
     )
-    out_edges = (
-        mine.filter(F.col("prop_type") == "entity")
-        .select(
-            F.col("prop"),
-            F.col("value").alias("neighbour_id"),
-            F.lit("out").alias("direction"),
-        )
-        .distinct()
+    out_edges = mine.filter(F.col("prop_type") == "entity").select(
+        F.col("prop"),
+        F.col("value").alias("neighbour_id"),
+        F.lit("out").alias("direction"),
     )
-    in_edges = inverted(statements, entity_id).select(
+    in_edges = _incoming(statements, entity_id).select(
         F.col("prop"),
         F.col("entity_id").alias("neighbour_id"),
         F.lit("in").alias("direction"),
     )
-    return out_edges.unionByName(in_edges)
+    # one distinct over both directions: one aggregate, one shuffle
+    return out_edges.unionByName(in_edges).distinct()
 
 
 def pagerank(

@@ -7,9 +7,15 @@ query returns *whole* Payment entities with all their props (F10). So:
 
 1. metadata criteria (dataset/schema) filter statements directly — these
    push down to parquet partition pruning / row-group skipping;
-2. each prop criterion compiles to a distinct-id set; the id sets are
-   intersected via left-semi joins (Catalyst plans broadcast semi-joins
-   when frontiers are small, shuffled hash otherwise);
+2. the entity-level criteria (each prop criterion, the search term) and
+   the order keys fold into ONE frontier aggregate: ``groupBy
+   (canonical_id)`` over the statements that meet at least one criterion
+   or carry the order prop, with one ``max(<criterion>)`` flag per
+   criterion and the conditional order keys ``__knum`` / ``__kstr``; an
+   entity matches when every flag is set. One shuffle on canonical_id,
+   carrying only the matching rows, whatever the number of criteria
+   (a reverse filter stays a semi-join: it matches statements outside
+   the metadata filter);
 3. surviving entities are re-expanded to all their statements and
    assembled (§2.6), ordered (numeric-coercing, O1), sliced (O2).
 
@@ -19,14 +25,18 @@ No SQL strings, no second in-memory engine: the reference's dual evaluator
 
 from __future__ import annotations
 
+import functools
+import operator
+from dataclasses import replace
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ftm_columnstore_spark import settings
 from ftm_columnstore_spark.model.ftm import SEARCHABLE_TYPES, schema_descendants
 from ftm_columnstore_spark.operators.assembly import assemble_entities
+from ftm_columnstore_spark.operators.graph import reverse_ids
 from ftm_columnstore_spark.plans.query import Aggregation, Criterion, Query
 
 
@@ -76,78 +86,83 @@ def _meta_predicate(c: Criterion) -> F.Column:
     return _compare(F.col(c.field), c.comparator, c.value)
 
 
-def compile_statements(statements: DataFrame, q: Query) -> DataFrame:
-    """Statements of the entities matching ``q`` (entity-level semantics)."""
+def _scoped(statements: DataFrame, q: Query) -> DataFrame:
+    """Statements under ``q``'s metadata criteria (pushed down to the
+    scan) and reverse filters (F7: entities referencing a given id, looked
+    up over all statements, so a reference from outside the metadata
+    filter still counts)."""
     df = statements
-
-    # 1. direct metadata filters — pushed down to the scan.
-    meta = [c for c in q.criteria if not c.is_prop and c.field != "reverse"]
-    for c in meta:
-        df = df.filter(_meta_predicate(c))
-
-    # 2. per-prop criteria → semi-join id sets.
-    prop_criteria = [c for c in q.criteria if c.is_prop]
-    for c in prop_criteria:
-        ids = (
-            df.filter(
-                (F.col("prop") == c.field)
-                & _compare(F.col("value"), c.comparator, c.value)
-            )
-            .select("canonical_id")
-            .distinct()
-        )
-        df = df.join(ids, on="canonical_id", how="left_semi")
-
-    # 3. reverse filter (F7): entities referencing a given id.
-    for c in (c for c in q.criteria if c.field == "reverse"):
-        ids = (
-            statements.filter(
-                (F.col("prop_type") == "entity")
-                & (F.col("value") == str(c.value))
-            )
-            .select("canonical_id")
-            .distinct()
-        )
-        df = df.join(ids, on="canonical_id", how="left_semi")
-
-    # 4. search (F8): case-insensitive containment over searchable values.
-    if q.search_term:
-        ids = (
-            df.filter(
-                F.col("prop_type").isin(list(SEARCHABLE_TYPES))
-                & F.lower(F.col("value")).contains(q.search_term.lower())
-            )
-            .select("canonical_id")
-            .distinct()
-        )
-        df = df.join(ids, on="canonical_id", how="left_semi")
-
+    for c in q.criteria:
+        if not c.is_prop and c.field != "reverse":
+            df = df.filter(_meta_predicate(c))
+    for c in q.criteria:
+        if c.field == "reverse":
+            ids = reverse_ids(statements, str(c.value))
+            df = df.join(ids, on="canonical_id", how="left_semi")
     return df
 
 
-def _order_key(statements: DataFrame, q: Query) -> DataFrame:
-    """Per-entity sort key for order_by(prop): numeric when castable
-    (O1 — '50001' sorts as 50001.0, not lexicographically), else string."""
-    agg_num = F.min if q.ascending else F.max
-    return (
-        statements.filter(F.col("prop") == q.order_by_prop)
-        .groupBy("canonical_id")
-        .agg(
-            agg_num(F.col("value").try_cast("double")).alias("__knum"),
-            agg_num(F.col("value")).alias("__kstr"),
+def _criteria(q: Query) -> list[F.Column]:
+    """One statement predicate per entity-level criterion: each prop
+    criterion, then the search (F8: case-insensitive containment over
+    searchable values)."""
+    preds = [
+        (F.col("prop") == c.field) & _compare(F.col("value"), c.comparator, c.value)
+        for c in q.criteria
+        if c.is_prop
+    ]
+    if q.search_term:
+        preds.append(
+            F.col("prop_type").isin(list(SEARCHABLE_TYPES))
+            & F.lower(F.col("value")).contains(q.search_term.lower())
         )
-    )
+    return preds
+
+
+def _frontier(scoped: DataFrame, q: Query, keyed: bool = False) -> DataFrame:
+    """canonical_id of every entity of ``scoped`` that meets all of ``q``'s
+    entity-level criteria, as ONE aggregate: ``max(<criterion>)`` flags
+    whether any statement of the entity meets it. ``keyed`` adds the
+    per-entity order_by(prop) keys: ``__knum`` numeric when castable
+    (O1 — '50001' sorts as 50001.0, not lexicographically), ``__kstr``
+    the string; null when the entity lacks the prop."""
+    preds = _criteria(q)
+    flags = [f"__c{i}" for i in range(len(preds))]
+    aggs = [F.max(p).alias(f) for p, f in zip(preds, flags)]
+    wanted = list(preds)
+    if keyed and q.order_by_prop is not None:
+        is_key = F.col("prop") == q.order_by_prop
+        pick = F.min if q.ascending else F.max
+        aggs += [
+            pick(F.when(is_key, F.col("value").try_cast("double"))).alias("__knum"),
+            pick(F.when(is_key, F.col("value"))).alias("__kstr"),
+        ]
+        wanted.append(is_key)
+    if preds:
+        # scale guard: only statements that can set a flag or a key
+        # shuffle, so a selective query moves its matches, not the store
+        scoped = scoped.filter(functools.reduce(operator.or_, wanted))
+    if not aggs:
+        return scoped.select("canonical_id").distinct()
+    ids = scoped.groupBy("canonical_id").agg(*aggs)
+    if flags:
+        ids = ids.filter(functools.reduce(operator.and_, map(F.col, flags)))
+    return ids.drop(*flags)
+
+
+def compile_statements(statements: DataFrame, q: Query) -> DataFrame:
+    """Statements of the entities matching ``q`` (entity-level semantics)."""
+    df = _scoped(statements, q)
+    if not _criteria(q):
+        return df
+    return df.join(_frontier(df, q), on="canonical_id", how="left_semi")
 
 
 def _ordered_ids(statements: DataFrame, q: Query) -> DataFrame:
     """Ordered, sliced (canonical_id, __knum, __kstr) frontier for ``q``
     (keys retained so callers can re-apply the ordering downstream)."""
-    matched = compile_statements(statements, q)
-    ids = matched.select("canonical_id").distinct()
-    if q.order_by_prop is not None:
-        keys = _order_key(matched, q)
-        ids = ids.join(keys, on="canonical_id", how="left")
-    else:
+    ids = _frontier(_scoped(statements, q), q, keyed=True)
+    if q.order_by_prop is None:
         ids = ids.withColumn("__knum", F.lit(None).cast("double")).withColumn(
             "__kstr", F.lit(None).cast("string")
         )
@@ -188,8 +203,9 @@ def compile_entities(statements: DataFrame, q: Query) -> DataFrame:
     The final result is re-sorted by the order key (reference
     ``tests/test_store.py:144-166``: entities stream back in query
     order): assembly's hash aggregation would otherwise scramble the
-    sliced frontier. Spark sorts distributed (range partitioning), so
-    this holds at cluster scale, matching ClickHouse ORDER BY semantics."""
+    sliced frontier. Spark sorts distributed (range partitioning; a
+    limited query takes its top rows per partition instead), so this
+    holds at cluster scale, matching ClickHouse ORDER BY semantics."""
     ids = _ordered_ids(statements, q)
     # Re-expand: whole entities, not just matching statements (F10).
     # no broadcast hint: ids is bounded for selective queries (AQE
@@ -202,10 +218,13 @@ def compile_entities(statements: DataFrame, q: Query) -> DataFrame:
         return assembled
     keyed = assembled.join(
         ids.withColumnRenamed("canonical_id", "id"), on="id", how="left"
-    )
-    return keyed.orderBy(*_order_direction(q, id_col="id")).drop(
-        "__knum", "__kstr"
-    )
+    ).orderBy(*_order_direction(q, id_col="id"))
+    if q.limit is not None:
+        # the frontier is already sliced, so this drops nothing: it makes
+        # the re-sort a TakeOrderedAndProject, with no range-partition
+        # sampling job
+        keyed = keyed.limit(q.limit)
+    return keyed.drop("__knum", "__kstr")
 
 
 # --- aggregations (§2.4) -----------------------------------------------------
@@ -242,11 +261,15 @@ def compile_aggregation_df(
         base = matched if agg.prop == "id" else matched.filter(F.col("prop") == agg.prop)
         if agg.groups is None:
             return base.agg(F.countDistinct("canonical_id").alias("value"))
-        joined = base.select("canonical_id").distinct().join(
-            _group_key(matched, agg.groups).distinct(), on="canonical_id"
-        )
-        out = joined.groupBy("__group").agg(
-            F.countDistinct("canonical_id").alias("value")
+        # group keys come from ``matched`` already: only a prop other
+        # than id narrows them to the entities carrying that prop
+        pairs = _group_key(matched, agg.groups)
+        if agg.prop != "id":
+            pairs = pairs.join(
+                base.select("canonical_id"), on="canonical_id", how="left_semi"
+            )
+        out = pairs.distinct().groupBy("__group").agg(
+            F.count("canonical_id").alias("value")
         )
     else:
         vals = matched.filter(F.col("prop") == agg.prop).select(
@@ -276,27 +299,35 @@ def compile_aggregation_df(
 def compile_aggregations(statements: DataFrame, q: Query) -> dict:
     """All of ``q``'s aggregations as the reference's nested dict shape:
     ``{func: {prop: value}, "groups": {group_prop: {func: {prop: {g: v}}}}}``
-    (golden: ``tests/test_store.py:169-237``)."""
-    from dataclasses import replace
-
+    (golden: ``tests/test_store.py:169-237``). One action per aggregation."""
     out: dict[str, Any] = {}
     for agg in q.aggregations:
-        df = compile_aggregation_df(statements, q, agg)
+        # a grouped aggregation also reports the ungrouped total
+        # (reference tests/test_store.py:174-237: the sum/count key
+        # appears alongside "groups" in the same response)
+        total = compile_aggregation_df(statements, q, replace(agg, groups=None))
         if agg.groups is None:
-            value = df.collect()[0]["value"]
-            out.setdefault(agg.func, {})[agg.prop] = value
-        else:
-            rows = df.collect()
-            (
-                out.setdefault("groups", {})
-                .setdefault(agg.groups, {})
-                .setdefault(agg.func, {})
-            )[agg.prop] = {r["group"]: r["value"] for r in rows}
-            # a grouped aggregation also reports the ungrouped total
-            # (reference tests/test_store.py:174-237: the sum/count key
-            # appears alongside "groups" in the same response)
-            total = compile_aggregation_df(
-                statements, q, replace(agg, groups=None)
-            ).collect()[0]["value"]
-            out.setdefault(agg.func, {})[agg.prop] = total
+            out.setdefault(agg.func, {})[agg.prop] = total.collect()[0]["value"]
+            continue
+        rows = (
+            compile_aggregation_df(statements, q, agg)
+            .withColumn("__total", F.lit(False))
+            .unionByName(
+                total.select(
+                    F.lit(None).cast("string").alias("group"),
+                    "value",
+                    F.lit(True).alias("__total"),
+                )
+            )
+            .collect()
+        )
+        groups = {r["group"]: r["value"] for r in rows if not r["__total"]}
+        (
+            out.setdefault("groups", {})
+            .setdefault(agg.groups, {})
+            .setdefault(agg.func, {})
+        )[agg.prop] = groups
+        out.setdefault(agg.func, {})[agg.prop] = next(
+            r["value"] for r in rows if r["__total"]
+        )
     return out

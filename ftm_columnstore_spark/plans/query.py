@@ -55,6 +55,14 @@ class Criterion:
     def __post_init__(self) -> None:
         if self.comparator not in COMPARATORS:
             raise ValueError(f"unknown comparator: {self.comparator}")
+        # a scalar string would be iterated character by character
+        if self.comparator in ("in", "not_in") and not isinstance(
+            self.value, (list, tuple, set)
+        ):
+            raise ValueError(
+                f"{self.field}__{self.comparator} needs a list, tuple or set,"
+                f" got {type(self.value).__name__}"
+            )
 
 
 @dataclass(frozen=True)

@@ -31,7 +31,7 @@ from functools import cache
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ftm_columnstore_spark import settings
+from ftm_columnstore_spark import lifecycle, settings
 from ftm_columnstore_spark.model.schemas import (
     STATEMENT_COLUMNS,
     STATEMENT_KEY,
@@ -236,14 +236,16 @@ class Store:
         stmts = entities_to_statements(
             entities, default_dataset=dataset, last_seen=last_seen
         )
-        if with_fingerprints:
-            stmts = stmts.persist()
-        self.write_statements(stmts)
-        if with_fingerprints:
-            from ftm_columnstore_spark.operators.blocking import (
-                derive_fingerprints,
-            )
+        if not with_fingerprints:
+            self.write_statements(stmts)
+            return
+        from ftm_columnstore_spark.operators.blocking import derive_fingerprints
 
+        # both writes read the explode: persisted once, released when
+        # the block exits, whether or not a write raised
+        with lifecycle.scope():
+            stmts = lifecycle.persist(stmts)
+            self.write_statements(stmts)
             (
                 derive_fingerprints(stmts)
                 .repartition("dataset")
@@ -251,7 +253,6 @@ class Store:
                 .partitionBy("dataset")
                 .parquet(os.path.join(self.uri, "fpx"))
             )
-            stmts.unpersist()
 
     def fingerprints(self) -> DataFrame:
         """The fpx side table (empty frame if never written)."""

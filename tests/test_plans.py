@@ -49,6 +49,91 @@ def test_topk_is_take_ordered(pstore):
     assert "TakeOrderedAndProject" in plan
 
 
+def _subtree(plan: str, marker: str) -> list[str]:
+    """Lines of the plan node on the first line containing ``marker``,
+    its descendants included."""
+    lines = plan.splitlines()
+    i = next(n for n, line in enumerate(lines) if marker in line)
+    depth = lines[i].index("+-")
+    sub = [lines[i]]
+    for line in lines[i + 1 :]:
+        if "+-" in line and line.index("+-") <= depth:
+            break
+        sub.append(line)
+    return sub
+
+
+def test_entity_criteria_share_one_frontier_aggregate(pstore):
+    """Two prop criteria and a search term fold into one aggregate on
+    canonical_id: exactly one shuffle on that key (one per criterion
+    would be three), fed only the rows that meet some criterion."""
+    import re
+
+    from ftm_columnstore_spark.plans.compiler import compile_statements
+    from ftm_columnstore_spark.plans.query import Q
+
+    q = Q().where(country="de", name__startswith="Acme").search("holding")
+    plan = _plan(compile_statements(pstore.statements(), q))
+    frontier = re.findall(r"Exchange hashpartitioning\(canonical_id#\d+, \d+\)", plan)
+    assert len(frontier) == 1
+    # scale guard: the exchange's input is filtered by the criteria
+    filters = [
+        line
+        for line in _subtree(plan, frontier[0])
+        if "Filter" in line and "Acme" in line
+    ]
+    assert len(filters) == 1
+    assert all(term in filters[0] for term in ("country", "de", "holding", " OR "))
+
+
+def test_limited_order_by_needs_no_range_partitioning(pstore):
+    from ftm_columnstore_spark.plans.compiler import compile_entities
+    from ftm_columnstore_spark.plans.query import Q
+
+    plan = _plan(compile_entities(pstore.statements(), Q().order_by("amountEur")[:2]))
+    assert "rangepartitioning" not in plan
+    assert plan.count("TakeOrderedAndProject") >= 2
+
+
+def _actions(spark, fn) -> int:
+    """SQL executions (actions) that ran the Spark jobs of ``fn``, found
+    through a job group as the benchmark tracer does."""
+    sc = spark.sparkContext
+    group = "test-plans-actions"
+    sc.setJobGroup(group, "count actions")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    ran = [executions.apply(i) for i in range(executions.size())]
+    return sum(any(e.jobs().contains(j) for j in jobs) for e in ran)
+
+
+def test_stats_is_one_action(spark, pstore, cache_empty):
+    from ftm_columnstore_spark.operators.aggregations import stats
+
+    out = {}
+    assert _actions(spark, lambda: out.update(stats(pstore.statements()))) == 1
+    assert out["entity_count"] == 10
+    # no InMemoryRelation left behind
+    assert cache_empty()
+
+
+def test_adjacent_is_one_distinct(statements):
+    import re
+
+    from ftm_columnstore_spark.operators.graph import adjacent
+
+    plan = _plan(adjacent(statements, "org-acme"))
+    # one distinct: its partial and its final aggregate
+    assert len(re.findall(r"HashAggregate\(keys=\[[^\]]*\], functions=\[\]", plan)) == 2
+
+
 def test_aggregation_is_two_phase(pstore):
     df = pstore.statements().groupBy("schema").agg(
         F.countDistinct("canonical_id").alias("n")

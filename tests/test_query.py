@@ -101,3 +101,52 @@ def test_slice(statements):
 def test_bad_comparator_raises():
     with pytest.raises(ValueError):
         Q().where(prop="date", value=1, comparator="huh")
+
+
+def test_in_needs_a_collection(statements):
+    # a scalar string would be matched character by character
+    with pytest.raises(ValueError):
+        Q().where(country__in="de")
+    with pytest.raises(ValueError):
+        Q().where(prop="country", value="de", comparator="not_in")
+    got = ids(statements, Q().where(country__in=["de"]))
+    assert got == ["addr-1", "org-acme", "org-beta"]
+    got = ids(statements, Q().where(schema="LegalEntity", country__not_in={"de"}))
+    assert got == ["per-carol"]
+
+
+def test_criteria_met_by_different_statements(statements):
+    # the country and the name criterion each hold on a different
+    # statement of org-acme; org-beta meets only the country one
+    got = ids(statements, Q().where(country="de", name__startswith="Acme"))
+    assert got == ["org-acme"]
+    got = ids(statements, Q().where(country="de").search("stiftung"))
+    assert got == ["org-beta"]
+
+
+def test_reverse_reference_from_another_dataset(spark):
+    from ftm_columnstore_spark.sources.statements import statements_from_rows
+
+    rows = [
+        # "x" has its name in d2 and its reference to "target" in d1
+        dict(id="s1", entity_id="x", prop="name", value="X Ltd", schema="Company", dataset="d2"),
+        dict(id="s2", entity_id="x", prop="owner", value="target", schema="Company", dataset="d1"),
+        dict(id="s3", entity_id="y", prop="name", value="Y Ltd", schema="Company", dataset="d2"),
+        dict(id="s4", entity_id="target", prop="name", value="T", schema="Person", dataset="d1"),
+    ]
+    df = statements_from_rows(spark, rows)
+    ents = compile_entities(df, Q().where(dataset="d2", reverse="target")).collect()
+    assert [e["id"] for e in ents] == ["x"]
+    # whole entity: the referencing statement from d1 is re-expanded too
+    assert ents[0]["properties"]["owner"] == ["target"]
+    assert ents[0]["datasets"] == ["d1", "d2"]
+
+
+def test_grouped_count_of_a_prop(statements):
+    from ftm_columnstore_spark.plans.compiler import compile_aggregations
+
+    # pay-3 (2009) has no payer: it counts towards no year
+    q = Q().where(schema="Payment").aggregate("count", "payer", groups="year")
+    res = compile_aggregations(statements, q)
+    assert res["groups"]["year"]["count"]["payer"] == {"2008": 1, "2009": 1}
+    assert res["count"]["payer"] == 2

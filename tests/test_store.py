@@ -198,6 +198,29 @@ def test_fingerprint_side_write(store, entities_df):
     assert fpx.filter(F.col("entity_id").startswith("pay-")).count() == 0
 
 
+def test_fingerprint_write_failure_releases_persist(
+    store, entities_df, cache_empty, monkeypatch
+):
+    """The explode both writes read is released on success and when the
+    fingerprint write raises."""
+    from ftm_columnstore_spark.operators import blocking
+
+    store.write_entities(
+        entities_df, last_seen="2024-01-01 00:00:00", with_fingerprints=True
+    )
+    assert cache_empty()
+
+    def broken(stmts):
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(blocking, "derive_fingerprints", broken)
+    with pytest.raises(RuntimeError, match="injected"):
+        store.write_entities(
+            entities_df, last_seen="2024-02-01 00:00:00", with_fingerprints=True
+        )
+    assert cache_empty()
+
+
 def test_register_views_sql(store, entities_df, spark):
     store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
     store.register_views()

@@ -17,6 +17,7 @@ PICKS = {
     "o1_topk_orders": "top-k plans as TakeOrderedAndProject (no global sort)",
     "w1_window_latest": "latest-wins window uses WindowGroupLimit partial+final (rank pushdown)",
     "e1_entity_assembly": "entity pivot: two-stage ObjectHashAggregate keyed on (canonical_id[, prop])",
+    "e3_entity_filter_query": "entity filter query: both prop criteria fold into ONE frontier HashAggregate on canonical_id (one max(<criterion>) flag each), fed by a Filter that ORs the criteria so only matching statements shuffle; the flags' AND picks the ids, broadcast into the whole-entity semi-join",
     "v1_ann_topk": "ANN brute force: single-row broadcast + one scan + TakeOrderedAndProject",
     "a12_forecast_revenue": "Q6 shape: every predicate in PushedFilters, 4-column ReadSchema, no shuffle before partial agg",
     "j9_shipping_priority": "Q3 shape: filtered dimension broadcast, big-side join, TakeOrderedAndProject top-10",
