@@ -206,11 +206,18 @@ def _calibration(spark) -> float:
 
 
 def _new_session():
-    """Fresh session per measurement BLOCK (solo vs concurrent): a
-    76-op best-of-N battery degrades the JVM in-session (code-cache
-    and GC pressure inflate late queries 5-10x — NOTES 'bench JVM
-    degradation'); a block-level restart keeps round-over-round solo
-    diffs from being noise-dominated (VERDICT r3 item 7)."""
+    """Fresh session per measurement BLOCK (solo vs concurrent), so
+    round-over-round solo diffs are not noise-dominated (VERDICT r3
+    item 7). What is measured about in-session slowdown:
+    - NOTES 'Caveats': one op took 25 s in an isolated session and
+      130-230 s late in a long shared local[32] session;
+    - OPTIMIZATION_r08.md §7 traced the battery's pass-over-pass
+      degradation to host CPU steal; steal-free passes were flat and GC
+      was ~1 s per 44 s pass;
+    - generated code: the battery's 111 ops at sf0.01 compile 1,737
+      classes, so Spark's default 100-entry class cache recompiled
+      2,637 of them on a second pass in one session. `get_spark` now
+      sizes that cache to 4096 entries (8 recompiles)."""
     from pyspark.sql import SparkSession
 
     from ftm_columnstore_spark.session import get_spark

@@ -130,7 +130,13 @@ class Query:
             if item < 0:
                 raise ValueError("negative indexing unsupported")
             return replace(self, offset=item, limit=1)
+        if item.step not in (None, 1):
+            raise ValueError("slice steps unsupported")
         start = item.start or 0
+        if start < 0:
+            raise ValueError("negative indexing unsupported")
+        if item.stop is not None and item.stop < start:
+            raise ValueError(f"slice stop {item.stop} before start {start}")
         limit = None if item.stop is None else item.stop - start
         return replace(self, offset=start, limit=limit)
 

@@ -88,6 +88,26 @@ def get_spark(
         # default, pinned here so digit-identical oracle parity can't
         # be broken by a session flipping allowPrecisionLoss.
         .config("spark.sql.decimal.operations.allowPrecisionLoss", "true")
+        # Generated-code class cache, LRU (Spark default 100 entries).
+        # A warm session re-runs the same plans, so a miss recompiles a
+        # class with Janino. Working sets measured at local[4]:
+        # - perfbench serve pass: about 120 classes; 93-96 recompiles
+        #   per warm pass at 100 entries, 0 at 4096;
+        # - perfbench operators pass: 83 classes, no recompiles either way;
+        # - bench.py's 111 HEADLINE ops at sf0.01: 1,737 classes; a second
+        #   pass recompiled 2,637 at 100 entries, 61 unbounded.
+        # 4096 is over twice the largest. JVM Metaspace did not grow
+        # (after two battery passes: 220 MB at 100 entries, 193 MB now).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # The class cache is keyed by generated source, and by default
+        # that source names the whole-stage codegen stage id. AQE hands
+        # out the ids as it re-plans, in an order that depends on which
+        # query stage finished first, so the same code can come back
+        # under a new name and recompile: 4-8 classes per warm View mix
+        # over the test fixture (the two branches of a grouped
+        # aggregation's union), 0 with the ids left out; 61 classes on a
+        # second battery pass, 8 with them left out.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")

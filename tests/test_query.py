@@ -96,6 +96,19 @@ def test_slice(statements):
     assert len(got) == 3
     one = compile_entities(statements, Q().where(dataset="grants")[2]).collect()
     assert len(one) == 1
+    assert compile_entities(statements, Q()[0:10:1]).count() == 10
+    assert compile_entities(statements, Q()[3:3]).count() == 0
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [slice(5, 3), slice(-3, None), slice(None, -1), slice(0, 10, 2), -1],
+)
+def test_bad_slice_raises(bad):
+    # a negative bound or a stop before the start used to reach Spark as
+    # a negative limit or offset; a step was dropped
+    with pytest.raises(ValueError):
+        Q()[bad]
 
 
 def test_bad_comparator_raises():

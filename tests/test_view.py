@@ -71,3 +71,32 @@ def test_view_profile(view):
     assert prof["schema"]["n_nulls"] == 0
     assert prof["schema"]["n_distinct_est"] >= 1
     assert prof["canonical_id"]["n_values"] > 0
+
+
+def test_warm_view_mix_compiles_no_code(spark, view):
+    # The mix cycles through about 150 generated classes on this fixture,
+    # more than Spark's default 100-entry class cache holds: there, each
+    # class is evicted before its next use and a warm run recompiles
+    # about 170 of them.
+    compilations = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+
+    def mix():
+        view.get_entity("org-acme")
+        list(view.entities(Q().where(country="de")))
+        list(view.get_adjacent("per-carol"))
+        list(view.entities(Q().search("agency")))
+        top = Q().where(schema="Payment").order_by("amountEur", ascending=False)
+        list(view.entities(top[:2]))
+        list(view.get_inverted("org-acme"))
+        view.aggregations(
+            Q().where(schema="Payment").aggregate("sum", "amountEur", groups="year")
+        )
+        view.aggregations(Q().aggregate("count", "id", groups="country"))
+        view.stats()
+
+    mix()
+    before = compilations.getCount()
+    mix()
+    assert compilations.getCount() - before == 0

@@ -10,7 +10,10 @@ For each named query, split wall time into:
 
 Also records the number of Spark jobs each phase launched (status
 tracker deltas): serial sub-jobs inside build are invisible in a plan
-but serialize the query's critical path.
+but serialize the query's critical path. And per phase, the generated
+classes Janino compiled and the milliseconds it took (deltas of
+``CodegenMetrics.METRIC_COMPILATION_TIME`` and ``CodeGenerator.compileTime``):
+a warm phase that still compiles is missing the codegen class cache.
 
 Usage: python tools/profile_phases.py [query ...]   (default: top-N by
 the last BENCH_FULL solo times)
@@ -60,33 +63,44 @@ def main() -> None:
         ids = tracker.getJobIdsForGroup(None)
         return max(ids) + 1 if ids else 0
 
+    jvm = spark._jvm
+    compilations = (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+    def mark() -> tuple[float, int, int, int]:
+        return (
+            time.perf_counter(),
+            n_jobs(),
+            compilations.getCount(),
+            codegen.compileTime(),
+        )
+
     def one(name: str) -> dict:
         spark.catalog.clearCache()
-        spark._jvm.System.gc()
+        jvm.System.gc()
         time.sleep(0.5)
-        j0 = n_jobs()
-        t0 = time.perf_counter()
+        m0 = mark()
         df = qs[name](spark, SF_DIR)
-        t1 = time.perf_counter()
-        j1 = n_jobs()
+        m1 = mark()
         digest = df.select(
             F.xxhash64(F.struct(*df.columns)).alias("h")
         ).groupBy().agg(F.count("h"), F.try_sum("h"))
         # physical planning of the digest plan (pre-AQE-execution)
         digest._jdf.queryExecution().executedPlan()
-        t2 = time.perf_counter()
-        j2 = n_jobs()
+        m2 = mark()
         digest.collect()
-        t3 = time.perf_counter()
-        j3 = n_jobs()
-        return {
-            "build": round(t1 - t0, 3),
-            "plan": round(t2 - t1, 3),
-            "exec": round(t3 - t2, 3),
-            "total": round(t3 - t0, 3),
-            "jobs_build": j1 - j0,
-            "jobs_exec": j3 - j2,
-        }
+        m3 = mark()
+        rec = {"total": round(m3[0] - m0[0], 3)}
+        for phase, (a, b) in zip(
+            ("build", "plan", "exec"), ((m0, m1), (m1, m2), (m2, m3))
+        ):
+            rec[phase] = round(b[0] - a[0], 3)
+            rec[f"jobs_{phase}"] = b[1] - a[1]
+            rec[f"compiles_{phase}"] = b[2] - a[2]
+            rec[f"compile_ms_{phase}"] = round((b[3] - a[3]) / 1e6, 1)
+        return rec
 
     results: dict[str, dict] = {}
     for name in names:
@@ -97,9 +111,12 @@ def main() -> None:
         results[name] = best
         print(
             f"{name:32s} total {best['total']:7.3f}  "
-            f"build {best['build']:6.3f} (jobs {best['jobs_build']:2d})  "
-            f"plan {best['plan']:6.3f}  exec {best['exec']:6.3f} "
-            f"(jobs {best['jobs_exec']:2d})",
+            + "  ".join(
+                f"{p} {best[p]:6.3f} (jobs {best[f'jobs_{p}']:2d}, "
+                f"compiles {best[f'compiles_{p}']:3d} / "
+                f"{best[f'compile_ms_{p}']:6.1f} ms)"
+                for p in ("build", "plan", "exec")
+            ),
             flush=True,
         )
     out = os.path.join(
