@@ -276,10 +276,6 @@ REVERSE_PROPS: dict[str, str] = {
 }
 
 
-def reverse_prop(prop: str) -> str:
-    return REVERSE_PROPS.get(prop, f"{prop}Reverse")
-
-
 # --- captions ---------------------------------------------------------------
 # schema -> ordered caption property precedence (first non-empty wins).
 # FtM default Thing caption is ["name"]; Address uses "full".

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ftm_columnstore_spark.functions.text import shingles_col, word_tokens_col
+from ftm_columnstore_spark.functions.text import shingles_col
 from ftm_columnstore_spark.lifecycle import persist, persisting
 
 
@@ -460,51 +460,17 @@ def minhash_dedup(
 
 # --- SimHash ------------------------------------------------------------------
 
-def _bit_masks(bits: int) -> list[int]:
-    # bit 63 as the signed-long sign bit (1<<63 overflows a literal long)
-    return [(1 << b) if b < 63 else -(1 << 63) for b in range(bits)]
-
-
-def simhash_col(text_col: str, bits: int = 64):
-    """SimHash of the token stream, columnar and single-pass: per-token
-    xxhash64, then ONE ``aggregate`` over the token hashes accumulating a
-    per-bit +1/-1 vote vector (zip_with against a literal mask array), then
-    one pack step OR-ing winning masks. No UDF, one walk of the tokens."""
-    masks = F.array(*[F.lit(m).cast("long") for m in _bit_masks(bits)])
-    tokens = word_tokens_col(text_col)
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            masks,
-            lambda a, m: a + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes,
-            masks,
-            lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
 def simhash_docs(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, sh) — 64-bit SimHash per document via Arrow-batched numpy:
-    the expression form (`simhash_col`) walks tokens×64 bits through
-    interpreted HOF lambdas (~4.3s for 5k sf0.1 docs); here the whole
-    batch is vectorized — ONE `pd.util.hash_array` call hashes every
+    a Spark-expression form walks tokens×64 bits through interpreted HOF
+    lambdas (~4.3s for 5k sf0.1 docs); here the whole batch is
+    vectorized — ONE `pd.util.hash_array` call hashes every
     token of every doc (C-speed, deterministic fixed-key siphash,
     PYTHONHASHSEED-independent), one broadcast builds the bit matrix,
     and `np.add.reduceat` folds per-doc votes without a Python-level
-    doc loop. SimHash values differ from `simhash_col`'s xxhash64-based
-    ones, but any good 64-bit token hash yields the same near-dup
+    doc loop. Any good 64-bit token hash yields the same near-dup
     geometry, which is the operator's contract."""
     from collections.abc import Iterator
 
@@ -1105,37 +1071,6 @@ def embedding_clusters(
             F.col("id").alias(id_col),
             F.coalesce("__cid", "id").alias("cluster_id"),
         )
-    )
-
-
-def embedding_dup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    min_cosine: float = 0.95,
-    num_planes: int = 16,
-) -> DataFrame:
-    """Embedding-cosine near-dup via random-hyperplane LSH: sign-pattern
-    bucket join, exact cosine verify on candidates. Deterministic planes
-    from xxhash64(seed, dim) so results are reproducible."""
-    from ftm_columnstore_spark.operators.similarity import _hyperplane_sig
-    from ftm_columnstore_spark.functions.vectors import cosine_similarity_col
-
-    sig = _hyperplane_sig(F.col(vec_col), num_planes)
-    hashed = df.select(F.col(id_col).alias("id"), F.col(vec_col), sig.alias("sig"))
-    l, r = hashed.alias("l"), hashed.alias("r")
-    cand = l.join(
-        r,
-        on=[F.col("l.sig") == F.col("r.sig"), F.col("l.id") < F.col("r.id")],
-    )
-    cos = cosine_similarity_col(F.col("l." + vec_col), F.col("r." + vec_col))
-    return (
-        cand.select(
-            F.col("l.id").alias("left_id"),
-            F.col("r.id").alias("right_id"),
-            F.round(cos, 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= min_cosine)
     )
 
 

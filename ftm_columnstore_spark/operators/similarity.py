@@ -5,15 +5,17 @@ Two tiers:
 - **brute_force_topk** — exact cosine top-k: broadcast the query vector(s),
   one scan, ``TakeOrderedAndProject`` top-k. The correctness baseline and
   the right plan when k·queries is small relative to the corpus.
-- **lsh_topk / _hyperplane_sig** — random-hyperplane LSH: candidates share
-  the query's sign-pattern bucket (optionally multi-probe by flipping
-  bits), exact cosine re-rank on the candidate set. The 100 TB path: the
-  scan prunes to matching buckets (partition the corpus by signature
-  prefix on write to turn this into partition pruning).
+- **lsh_topk_portable** — random-hyperplane LSH on quantized integer
+  features: candidates lie within a few bits of the query's sign pattern
+  (multi-probe), then an exact cosine re-rank on the candidate set. The
+  100 TB path: the scan prunes to matching buckets (partition the corpus
+  by signature prefix on write to turn this into partition pruning).
 
-Planes are derived from ``sin(xxhash64(plane, dim))`` — deterministic,
-no stored model, identical across executors; for production-quality recall
-swap in trained IVF centroids, same plan shape.
+Planes are deterministic ±1 vectors (``dedup._plane_signs``) and every
+dot product is exact int64 arithmetic, so the candidate set, the scores
+and the k-cut are identical on every executor and in the DuckDB oracle;
+for production-quality recall swap in trained IVF centroids, same plan
+shape.
 """
 
 from __future__ import annotations
@@ -34,59 +36,6 @@ def brute_force_topk(
     """Exact cosine top-k of ``query_vec`` against every row."""
     q = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<float>")
     scored = df.select(
-        F.col(id_col),
-        F.round(cosine_similarity_col(F.col(vec_col), q), 6).alias("cosine"),
-    )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
-
-
-def _hyperplane_sig(vec: Column, num_planes: int) -> Column:
-    """Sign pattern of ``vec`` against ``num_planes`` pseudo-random
-    hyperplanes, packed into a long. Plane p's weight for dimension d is
-    sin(xxhash64(p, d)) — deterministic on every executor."""
-    dims = F.size(vec)
-
-    def bit(p: int) -> Column:
-        dot = F.aggregate(
-            F.zip_with(
-                vec,
-                F.sequence(F.lit(0), dims - 1),
-                lambda x, d: x.cast("double")
-                * F.sin(F.xxhash64(F.lit(p), d).cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0)).cast("long")
-
-    sig = F.lit(0).cast("long")
-    for p in range(num_planes):
-        sig = sig.bitwiseOR(bit(p))
-    return sig
-
-
-def lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_planes: int = 12,
-    probe_bits: int = 1,
-) -> DataFrame:
-    """ANN top-k: restrict the scan to rows whose hyperplane signature is
-    within ``probe_bits`` of the query's (multi-probe LSH), then exact
-    cosine re-rank. Recall grows with probe_bits; probe_bits=num_planes
-    degenerates to brute force."""
-    spark = df.sparkSession
-    q = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<float>")
-    qsig = spark.range(1).select(_hyperplane_sig(q, num_planes).alias("s")).collect()[0]["s"]
-
-    sig = _hyperplane_sig(F.col(vec_col), num_planes)
-    candidates = df.withColumn("__sig", sig).filter(
-        F.bit_count(F.col("__sig").bitwiseXOR(F.lit(qsig))) <= probe_bits
-    )
-    scored = candidates.select(
         F.col(id_col),
         F.round(cosine_similarity_col(F.col(vec_col), q), 6).alias("cosine"),
     )
@@ -234,7 +183,7 @@ def lsh_topk_portable(
     Hamming of the query's, re-ranked by cosine computed from the
     quantized ints (IEEE *, /, sqrt are correctly rounded → bit-identical
     across engines, so candidate set, scores AND the k-cut are
-    oracle-checkable, unlike the float-plane :func:`lsh_topk`)."""
+    oracle-checkable)."""
     from ftm_columnstore_spark.operators.dedup import _plane_signs
 
     dim = len(query_vec)

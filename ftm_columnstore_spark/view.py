@@ -123,7 +123,3 @@ class View:
             .orderBy("column")
             .collect()
         ]
-
-
-def view_for(store: Store, dataset: str | None = None) -> View:
-    return View(store, dataset)

@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from ftm_columnstore_spark.operators.dedup import (
     dedup_exact,
-    embedding_dup_pairs,
     exact_duplicates,
     minhash_dedup,
     minhash_lsh_pairs,
@@ -174,23 +173,6 @@ def test_ngram_jaccard_pairs(corpus):
     assert pairs[(1, 2)] == 1.0
     assert 0.2 < pairs[(1, 3)] < 1.0
     assert (4, 5) not in pairs
-
-
-def test_embedding_dup_pairs(spark):
-    vecs = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0, 0.0, 0.2]),
-            (2, [1.0, 0.01, 0.0, 0.2]),   # near-identical to 1
-            (3, [0.0, 1.0, 0.0, 0.0]),    # orthogonal-ish
-        ],
-        ["vec_id", "embedding"],
-    ).withColumn("embedding", F.col("embedding").cast("array<float>"))
-    pairs = {
-        (r["left_id"], r["right_id"]): r["cosine"]
-        for r in embedding_dup_pairs(vecs, min_cosine=0.99).collect()
-    }
-    assert (1, 2) in pairs and pairs[(1, 2)] > 0.99
-    assert all(3 not in p for p in pairs)
 
 
 def test_jaccard_dedup(corpus):

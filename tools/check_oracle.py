@@ -1,7 +1,10 @@
 """Self-check: run every __spark_entry__ query against its DuckDB oracle
 (the driver's t2 gate, approximated). Usage:
 
-    PYTHONPATH=/root/repo python tools/check_oracle.py [sf_dir]
+    python tools/check_oracle.py [sf_dir [query ...]]
+
+``sf_dir`` defaults to sf0.01 beside $SPARK_GRAFT_SF_DIR; named queries
+run alone, and an unknown name exits 2 before any session starts.
 
 Compares row count, sorted column names, and order-insensitive values
 (floats to 1e-9 relative). Each query runs inside a lifecycle scope, and
@@ -12,13 +15,18 @@ mismatch or leak.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
+
+#: the default scale: sf0.01, beside the bench's $SPARK_GRAFT_SF_DIR
+SF_DIR = os.path.join(os.path.dirname(bench.SF_DIR.rstrip("/")), "sf0.01")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -70,25 +78,31 @@ def compare(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> lis
     return problems
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+def main(argv: list[str] | None = None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
+    sf_dir = argv[0] if argv else SF_DIR
+    only = set(argv[1:])
 
     import __spark_entry__ as entry_mod
     from ftm_columnstore_spark.lifecycle import scope
     from ftm_columnstore_spark.session import get_spark
+
+    queries = entry_mod.queries()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+    if only:
+        queries = {k: v for k, v in queries.items() if k in only}
 
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = 0
     for name, fn in queries.items():
-        if only and name not in only:
-            continue
         try:
             with scope():
                 spark_pdf = fn(spark, sf_dir).toPandas()
