@@ -39,6 +39,10 @@ from ftm_columnstore_spark.model.schemas import (
 )
 from ftm_columnstore_spark.sources.statements import entities_to_statements
 
+#: dataset partitions smaller than this share one compaction rewrite job
+#: (see ``Store._group_datasets``)
+REWRITE_BATCH_BYTES = 4 << 30
+
 
 def dedup_statements(df: DataFrame) -> DataFrame:
     """ReplacingMergeTree semantics (SURVEY §1.4, §2.8 U2): rows equal on
@@ -59,6 +63,15 @@ def dedup_statements(df: DataFrame) -> DataFrame:
         .select(*STATEMENT_KEY, *[F.col(f"__m.{c}").alias(c) for c in others])
         .select(*df.columns)
     )
+
+
+def _scoped(df: DataFrame, dataset: str | list[str] | None) -> DataFrame:
+    """Rows of one dataset or a catalog (list) of them; all when None."""
+    if isinstance(dataset, str):
+        return df.filter(F.col("dataset") == dataset)
+    if dataset is not None:
+        return df.filter(F.col("dataset").isin(list(dataset)))
+    return df
 
 
 class Store:
@@ -315,10 +328,7 @@ class Store:
                 return self.spark.createDataFrame([], STATEMENT_SCHEMA)
             df = self.spark.read.schema(STATEMENT_SCHEMA).parquet(self._path)
             already_clean = self.is_compacted()
-        if isinstance(dataset, str):
-            df = df.filter(F.col("dataset") == dataset)
-        elif dataset is not None:
-            df = df.filter(F.col("dataset").isin(list(dataset)))
+        df = _scoped(df, dataset)
         if as_of is not None:
             df = df.filter(
                 F.col("last_seen") <= F.to_timestamp(F.lit(as_of))
@@ -392,9 +402,6 @@ class Store:
             .saveAsTable(table)
         )
 
-    def bucketed_statements(self, table: str = "statements_bucketed") -> DataFrame:
-        return self.spark.table(table)
-
     def use_bucketed(
         self, table: str = "statements_bucketed", enabled: bool = True
     ) -> None:
@@ -426,12 +433,20 @@ class Store:
         min/max, independent of corpus size. Derived artifact: rebuild
         after bulk writes or resolver changes (like the reference's
         OPTIMIZE, staleness is operational, not a correctness risk —
-        readers fall back to the main table when absent)."""
+        readers fall back to the main table when absent).
+
+        Built from the store WITHOUT its resolver: the index holds raw
+        ``canonical_id`` values, and :meth:`entity_refs` applies the
+        resolver of whichever store reads it, as the main table does."""
         path = os.path.join(self.uri, "value_index")
         tmp = path + ".build"
+        resolver, self._canonical = self._canonical, None
+        try:
+            src = self.statements()
+        finally:
+            self._canonical = resolver
         (
-            self.statements()
-            .filter(F.col("prop_type") == "entity")
+            src.filter(F.col("prop_type") == "entity")
             .repartitionByRange(F.col("value"))
             .sortWithinPartitions("value")
             .write.mode("overwrite")
@@ -454,14 +469,16 @@ class Store:
             return None
         return self.spark.read.schema(STATEMENT_SCHEMA).parquet(path)
 
-    def entity_refs(self) -> DataFrame:
-        """Entity-reference statements (``prop_type='entity'``), served
-        from the value index when built (file-pruned point lookups),
-        falling back to a filtered scan of the main table."""
+    def entity_refs(self, dataset: str | list[str] | None = None) -> DataFrame:
+        """Entity-reference statements (``prop_type='entity'``) of
+        ``dataset`` (as in :meth:`statements`), served from the value
+        index when built (file-pruned point lookups), falling back to a
+        filtered scan of the main table. Both paths carry the resolver's
+        ``canonical_id``."""
         idx = self.value_index()
-        if idx is not None:
-            return idx
-        return self.statements().filter(F.col("prop_type") == "entity")
+        if idx is None:
+            return self.statements(dataset).filter(F.col("prop_type") == "entity")
+        return self._apply_canonical(_scoped(idx, dataset))
 
     def register_views(self, prefix: str = "") -> None:
         """Expose the store to ``spark.sql``: ``<prefix>statements`` (deduped)
@@ -530,15 +547,16 @@ class Store:
                     pass
         return total
 
-    def _group_datasets(self, datasets, batch_bytes: int) -> list[list]:
+    def _group_datasets(self, datasets) -> list[list]:
         """Greedy size-bounded grouping for the rewrite loop: a
         catalog-style store holds hundreds of SMALL datasets, and one
         Spark job per dataset would pay per-job overhead hundreds of
         times for seconds of work — small partitions share one rewrite
-        job (combined size ≤ ``batch_bytes``), while any partition at or
-        above the threshold rewrites alone (``slices`` bounds its
-        shuffle). Scratch stays bounded by
-        max(batch_bytes, largest_dataset/slices) + one group's output."""
+        job (combined size ≤ ``REWRITE_BATCH_BYTES``), while any
+        partition at or above the threshold rewrites alone (``slices``
+        bounds its shuffle). Scratch stays bounded by
+        max(REWRITE_BATCH_BYTES, largest_dataset/slices) + one group's
+        output."""
         sized = sorted(
             ((self._partition_bytes(ds), ds) for ds in datasets),
             key=lambda t: (-t[0], str(t[1])),
@@ -547,10 +565,10 @@ class Store:
         cur: list = []
         cur_bytes = 0
         for size, ds in sized:
-            if size >= batch_bytes:
+            if size >= REWRITE_BATCH_BYTES:
                 groups.append([ds])
                 continue
-            if cur and cur_bytes + size > batch_bytes:
+            if cur and cur_bytes + size > REWRITE_BATCH_BYTES:
                 groups.append(cur)
                 cur, cur_bytes = [], 0
             cur.append(ds)
@@ -559,14 +577,7 @@ class Store:
             groups.append(cur)
         return groups
 
-    def _rewrite_datasets(
-        self,
-        datasets,
-        slices: int = 1,
-        keep=None,
-        partitions_per_slice: int | None = None,
-        batch_bytes: int = 4 << 30,
-    ) -> None:
+    def _rewrite_datasets(self, datasets, slices: int = 1, keep=None) -> None:
         """Rewrite the named dataset partitions deduplicated (and
         filtered to ``keep`` rows, if given), one size-bounded GROUP of
         datasets at a time (see ``_group_datasets``), in ``slices``
@@ -578,16 +589,12 @@ class Store:
         away has its live partition removed (rename-aside, then
         delete).
 
-        ``partitions_per_slice`` sizes each slice's output (default:
-        the session's shuffle partitions). Without it, total output
-        file count multiplies with ``slices`` — measured ~22% on-disk
-        growth at 200M+ from dictionary-page resets in the smaller
-        files; ``shuffle_partitions // slices`` keeps the file count
-        (and compression) of a monolithic rewrite at the cost of less
-        write parallelism per slice job."""
+        Every slice job writes its own files, so the output file count
+        grows with ``slices`` (measured ~22% more bytes on disk at 200M+
+        statements, from dictionary-page resets in the smaller files)."""
         tmp = self._path + ".compact"
         aside_root = self._path + ".aside"
-        for group in self._group_datasets(datasets, batch_bytes):
+        for group in self._group_datasets(datasets):
             shutil.rmtree(tmp, ignore_errors=True)
             vals = [d for d in group if d is not None]
             pred = (
@@ -614,15 +621,10 @@ class Store:
                         )
                         == i
                     )
-                out = dedup_statements(part)
-                if partitions_per_slice is not None:
-                    out = out.repartition(
-                        max(1, partitions_per_slice), "canonical_id"
-                    )
-                else:
-                    out = out.repartition("canonical_id")
                 (
-                    out.sortWithinPartitions(
+                    dedup_statements(part)
+                    .repartition("canonical_id")
+                    .sortWithinPartitions(
                         "canonical_id", "entity_id", "prop", "value"
                     )
                     .write.mode("append")
@@ -656,11 +658,7 @@ class Store:
         shutil.rmtree(aside_root, ignore_errors=True)
 
     def optimize(
-        self,
-        datasets: list[str] | None = None,
-        slices: int = 1,
-        partitions_per_slice: int | None = None,
-        batch_bytes: int = 4 << 30,
+        self, datasets: list[str] | None = None, slices: int = 1
     ) -> None:
         """Compaction: rewrite the store deduplicated (the reference's
         ``OPTIMIZE TABLE … FINAL DEDUPLICATE``, engine.py:114-125) —
@@ -671,7 +669,8 @@ class Store:
         bounded by ONE rewrite group's input + shuffle + output, not
         the corpus's: datasets are rewritten into a side dir and
         swapped in via the rename-aside ``_promote`` group by group —
-        small datasets share a job (combined size ≤ ``batch_bytes``, so
+        small datasets share a job (combined size ≤
+        ``REWRITE_BATCH_BYTES``, so
         a catalog of hundreds of small datasets doesn't pay per-job
         overhead hundreds of times), large ones rewrite alone.
         Per-dataset dedup is EXACT, not approximate: the statement
@@ -689,12 +688,6 @@ class Store:
         what fits a 100 TB compaction into bounded executor/scratch
         space (the monolithic rewrite ENOSPC'd this sandbox at 400M
         statements; the sliced one completes — see NOTES).
-
-        ``partitions_per_slice`` keeps total output file count — and
-        thus parquet dictionary compression — independent of ``slices``
-        (see ``_rewrite_datasets``); pass
-        ``shuffle_partitions // slices`` when output size matters more
-        than per-slice write parallelism.
 
         ``datasets`` limits the rewrite to the named partitions
         (incremental compaction after a targeted backfill). The
@@ -724,12 +717,7 @@ class Store:
         # the physical rewrite begins: stale the marker up front so a
         # crash mid-loop fails safe (dedup-on-read resumes)
         self.bump_epoch()
-        self._rewrite_datasets(
-            datasets,
-            slices=slices,
-            partitions_per_slice=partitions_per_slice,
-            batch_bytes=batch_bytes,
-        )
+        self._rewrite_datasets(datasets, slices=slices)
         if full:
             self._set_compacted()
 

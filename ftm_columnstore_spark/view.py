@@ -23,7 +23,6 @@ from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ftm_columnstore_spark.plans.query import Query
 from ftm_columnstore_spark.store import Store
@@ -65,22 +64,10 @@ class View:
             yield _entity_dict(row)
 
     # --- graph --------------------------------------------------------------
-    def _entity_refs(self) -> DataFrame:
-        """Reverse-lookup source: the value-clustered index when built
-        (file-pruned point lookup), else the dataset-scoped main table."""
-        idx = self.store.value_index()
-        if idx is None:
-            return self._statements()
-        if isinstance(self.dataset, str):
-            return idx.filter(F.col("dataset") == self.dataset)
-        if self.dataset is not None:
-            return idx.filter(F.col("dataset").isin(list(self.dataset)))
-        return idx
-
     def get_inverted(self, entity_id: str) -> Iterator[tuple[str, str]]:
         from ftm_columnstore_spark.operators.graph import inverted
 
-        for row in inverted(self._entity_refs(), entity_id).collect():
+        for row in inverted(self.store.entity_refs(self.dataset), entity_id).collect():
             yield row["prop"], row["entity_id"]
 
     def get_adjacent(self, entity_id: str) -> Iterator[tuple[str, str, str]]:

@@ -28,6 +28,11 @@ def spark() -> SparkSession:
             "spark.sql.shuffle.partitions": "4",
             "spark.driver.memory": "2g",
             "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="ftmcs-wh-"),
+            # perfbench's Tracer (tests/test_tools.py) reads every stage of
+            # a span's jobs from the status store, which past this many
+            # stages drops old ones, skipped stages first; the suite runs
+            # about 12k
+            "spark.ui.retainedStages": "100000",
         },
     )
     yield spark

@@ -238,7 +238,7 @@ def test_bucketed_table_no_exchange(store, entities_df, spark):
 
     store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
     store.to_bucketed_table("t_bucketed", buckets=4)
-    bucketed = store.bucketed_statements("t_bucketed")
+    bucketed = spark.table("t_bucketed")
     entities = assemble_entities(bucketed)
     plan = entities._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
@@ -316,6 +316,24 @@ def test_view_inverted_uses_index(store, entities_df):
     before = sorted(v.get_inverted(ref_id))
     store.build_value_index()
     assert sorted(v.get_inverted(ref_id)) == before
+
+
+def test_resolved_view_inverted_unchanged_by_value_index(store, spark, entities_df):
+    """A resolved store reads the value index through its resolver, as it
+    reads the main table; an index built under a resolver holds the raw
+    ids, so the plain view of the same store does not see canonical ones."""
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    resolved = Store(spark, store.uri)
+    resolved.set_resolver(spark.createDataFrame(
+        [("pay-1", "pay-X"), ("pay-2", "pay-X")], ["entity_id", "canonical_id"]))
+    merged = [("paymentsReceived", "pay-X")]
+    raw = [("paymentsReceived", "pay-1"), ("paymentsReceived", "pay-2")]
+    assert sorted(resolved.view().get_inverted("org-acme")) == merged
+    resolved.build_value_index()
+    assert sorted(resolved.view().get_inverted("org-acme")) == merged
+    assert sorted(resolved.view("grants").get_inverted("org-acme")) == merged
+    assert list(resolved.view("no-such-dataset").get_inverted("org-acme")) == []
+    assert sorted(store.view().get_inverted("org-acme")) == raw
 
 
 def test_drop_and_exists(store, entities_df):
@@ -629,25 +647,6 @@ def test_pop_is_incremental_and_preserves_marker(store, entities_df, spark):
     assert store.statements().filter(F.col("dataset") == "solo_ds").count() == 0
 
 
-def test_sliced_optimize_with_bounded_output_partitions(store, entities_df):
-    """partitions_per_slice keeps total output file count independent of
-    the slice count without changing the result."""
-    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
-    store.write_entities(entities_df, last_seen="2024-02-01 00:00:00")
-    expected = sorted(
-        tuple(r)
-        for r in store.statements().select("id", "value", "last_seen").collect()
-    )
-    store.optimize(slices=3, partitions_per_slice=1)
-    assert store.is_compacted()
-    got = sorted(
-        tuple(r)
-        for r in store.statements(deduped=False)
-        .select("id", "value", "last_seen").collect()
-    )
-    assert got == expected
-
-
 def test_bucketed_rebuild_reads_live_store(store, entities_df, spark):
     """Round-10 self-review regression: rebuilding the bucketed snapshot
     while use_bucketed serving is enabled must snapshot the LIVE store
@@ -674,24 +673,27 @@ def test_bucketed_rebuild_reads_live_store(store, entities_df, spark):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_grouped_rewrite_matches_per_dataset(store, entities_df):
+def test_grouped_rewrite_matches_per_dataset(store, entities_df, monkeypatch):
     """Catalog-style stores: small datasets share one rewrite job
-    (batch_bytes groups them); forcing one-job-per-dataset
-    (batch_bytes=1: every partition is >= the threshold, so each
+    (REWRITE_BATCH_BYTES groups them); forcing one-job-per-dataset
+    (a threshold of 1 byte: every partition is >= it, so each
     rewrites alone) produces the identical store."""
+    import ftm_columnstore_spark.store as store_mod
+
     store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
     store.write_entities(entities_df, last_seen="2024-02-01 00:00:00")
-    groups = store._group_datasets(
-        [r["dataset"] for r in
-         store.statements().select("dataset").distinct().collect()],
-        batch_bytes=4 << 30,
-    )
+    datasets = [r["dataset"] for r in
+                store.statements().select("dataset").distinct().collect()]
+    groups = store._group_datasets(datasets)
     assert len(groups) == 1 and len(groups[0]) >= 2  # small ones share
     expected = sorted(
         tuple(r)
         for r in store.statements().select("id", "value", "last_seen").collect()
     )
-    store.optimize(batch_bytes=1)  # every dataset alone
+    monkeypatch.setattr(store_mod, "REWRITE_BATCH_BYTES", 1)
+    assert len(store._group_datasets(datasets)) == len(datasets)
+    store.optimize()  # every dataset alone
+    monkeypatch.undo()
     assert store.is_compacted()
     got_single = sorted(
         tuple(r)
@@ -701,7 +703,7 @@ def test_grouped_rewrite_matches_per_dataset(store, entities_df):
     assert got_single == expected
     # append + grouped compaction: same result again
     store.write_entities(entities_df, last_seen="2024-03-01 00:00:00")
-    store.optimize()  # default batch_bytes: one shared job
+    store.optimize()  # default threshold: one shared job
     assert store.is_compacted()
     seen = store.statements(deduped=False).select("last_seen").collect()
     assert all(str(r["last_seen"]).startswith("2024-03-01") for r in seen)
