@@ -240,6 +240,8 @@ def _new_session():
 def main() -> None:
     import __spark_entry__ as entry_mod
 
+    from ftm_columnstore_spark import lifecycle
+
     spark = _new_session()
     qs = entry_mod.queries()
     # run() resolves the session through this holder, NOT
@@ -257,13 +259,17 @@ def main() -> None:
         # One summed hash forces the whole plan and returns one row.
         from pyspark.sql import functions as F
 
+        # the scope releases what the op persisted once the timer has
+        # stopped, so a sample never reads the previous sample's cache
         s = sess["spark"]
-        t0 = time.perf_counter()
-        df = qs[name](s, SF_DIR)
-        df.select(
-            F.xxhash64(F.struct(*df.columns)).alias("h")
-        ).groupBy().agg(F.count("h"), F.try_sum("h")).collect()
-        return time.perf_counter() - t0
+        with lifecycle.scope():
+            t0 = time.perf_counter()
+            df = qs[name](s, SF_DIR)
+            df.select(
+                F.xxhash64(F.struct(*df.columns)).alias("h")
+            ).groupBy().agg(F.count("h"), F.try_sum("h")).collect()
+            elapsed = time.perf_counter() - t0
+        return elapsed
 
     machine_start = _machine_state()
 

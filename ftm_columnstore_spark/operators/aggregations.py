@@ -17,28 +17,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dataset_stats(statements: DataFrame, approx: bool = False) -> DataFrame:
+def dataset_stats(statements: DataFrame) -> DataFrame:
     """Per-(dataset, schema) distinct-entity + statement counts — the
-    ``<stmt>_stats`` MV equivalent (engine.py:210-217).
-
-    ``approx=True`` swaps the exact distinct (a full shuffle of the
-    (group, canonical_id) keyspace) for the portable HLL estimate
-    (``operators.sketches`` — register-bounded state, ~1.6% error at
-    p=12); the statement count stays exact. The 100 TB default for
-    monitoring dashboards, where the entity count is a trend line, not
-    an invoice."""
-    if approx:
-        from ftm_columnstore_spark.operators.sketches import hll_cardinality
-
-        ents = hll_cardinality(
-            statements, "canonical_id", p=12, group_by=["dataset", "schema"]
-        ).withColumnRenamed("n_distinct_est", "entities")
-        counts = statements.groupBy("dataset", "schema").agg(
-            F.count(F.lit(1)).alias("statements")
-        )
-        return ents.join(counts, on=["dataset", "schema"]).select(
-            "dataset", "schema", "entities", "statements"
-        )
+    ``<stmt>_stats`` MV equivalent (engine.py:210-217)."""
     return statements.groupBy("dataset", "schema").agg(
         F.countDistinct("canonical_id").alias("entities"),
         F.count(F.lit(1)).alias("statements"),

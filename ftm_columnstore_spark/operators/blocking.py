@@ -160,7 +160,6 @@ def score_pairs(pairs: DataFrame, statements: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
-    algorithm: str = "star",
     small_graph_threshold: int = 100_000,
     edges_deduped: bool = False,
 ) -> DataFrame:
@@ -169,35 +168,26 @@ def connected_components(
     ``store.py:25-28`` (resolver/linker), queried at
     ``tests/test_store.py:264-269``.
 
-    ``algorithm="star"`` (default): alternating large-star/small-star
-    (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond")
-    — converges in O(log² n) rounds regardless of component diameter, so
-    an adversarial million-node chain finishes in ~20 rounds instead of a
+    Alternating large-star/small-star rounds (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond") — converges in
+    O(log² n) rounds regardless of component diameter, so an
+    adversarial million-node chain finishes in ~20 rounds instead of a
     million. Each round is two groupBy-min + join passes; no per-node
     neighbour arrays are ever materialized, so a 100M-member component's
-    hub never lands in one task.
+    hub never lands in one task. Self-loop-only nodes are absent from
+    the output.
 
-    ``algorithm="label"``: minimum-label propagation — one groupBy-min +
-    join per round, O(component diameter) rounds. Wins on the shallow
-    near-forest graphs entity matching actually produces (diameter ≤ 3-4:
-    fewer, cheaper rounds), loses badly on long chains.
-
-    Small-graph fast path (``algorithm="star"``, the default): when the
-    (distinct, self-loop-free) edge set holds at most
-    ``small_graph_threshold`` rows, the edges are collected and labeled
-    with driver-side union-find — one bounded collect (the house rule:
-    the threshold is the bound, default 100k edges ≈ a few MB) replaces
-    5-15 shuffle rounds. This is the COMMON case for near-dup pair
-    graphs over mostly-unique corpora (measured: the d16/v15/t23
-    entries each spent ~4-5s in star rounds over a few-hundred-edge
-    graph). The iterative path is untouched for anything larger;
-    labels are identical (component minimum) either way, pinned by a
-    both-paths test. Pass ``small_graph_threshold=0`` to force the
-    distributed rounds. The label path skips the probe entirely — it
-    deliberately keeps its historical output for self-loop-only nodes
-    (present under "label", absent under "star"/fast), and building
-    the deduped relation just to probe would cost large label-mode
-    graphs a full wasted distinct+checkpoint job.
+    Small-graph fast path: when the (distinct, self-loop-free) edge set
+    holds at most ``small_graph_threshold`` rows, the edges are
+    collected and labeled with driver-side union-find — one bounded
+    collect (the house rule: the threshold is the bound, default 100k
+    edges ≈ a few MB) replaces 5-15 shuffle rounds. This is the COMMON
+    case for near-dup pair graphs over mostly-unique corpora (measured:
+    the d16/v15/t23 entries each spent ~4-5s in star rounds over a
+    few-hundred-edge graph). The iterative path is untouched for
+    anything larger; labels are identical (component minimum) either
+    way, pinned by a both-paths test. Pass ``small_graph_threshold=0``
+    to force the distributed rounds.
 
     ``edges_deduped=True`` asserts the input is already self-loop-free
     and distinct (e.g. LSH pair relations, whose ``left_id < right_id``
@@ -206,66 +196,25 @@ def connected_components(
     §2.4). Labels are unchanged for inputs that honour the assertion
     (union-find and the star rounds are duplicate-idempotent; only the
     small-graph row-count guard would see duplicates)."""
-    if algorithm == "star":
-        deduped = edges.select(
-            F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-        )
-        if not edges_deduped:
-            deduped = deduped.filter(F.col("src") != F.col("dst")).distinct()
-        # persist + ONE count materializes the relation AND decides the
-        # small-graph path — r08 spent two sequential driver jobs here
-        # (eager localCheckpoint, then a count over it); folding them
-        # saves a job per call (VERDICT r8 item 3, guide §2.6/§5).
-        deduped = persist(deduped)
-        n_edges = deduped.count()
-        if 0 < small_graph_threshold >= n_edges:
-            # rows cross to the driver only once the graph is known
-            # small; the collect reads the just-populated cache, and
-            # nothing reads the relation after it
-            rows = deduped.collect()
-            deduped.unpersist()
-            return _cc_union_find(edges.sparkSession, rows, deduped.schema)
-        return _cc_star(deduped, max_iterations, pre_deduped=True)
-    labels = (
-        edges.select(F.col("left_id").alias("id"))
-        .union(edges.select("right_id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
-    sym = edges.select(
+    deduped = edges.select(
         F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-    ).union(
-        edges.select(F.col("right_id"), F.col("left_id"))
     )
-    for _ in range(max_iterations):
-        neighbour_min = (
-            sym.join(labels, sym.src == labels.id)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = (
-            labels.join(neighbour_min, labels.id == neighbour_min.dst, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select(
-        F.col("id").alias("entity_id"), F.col("label").alias("canonical_id")
-    )
+    if not edges_deduped:
+        deduped = deduped.filter(F.col("src") != F.col("dst")).distinct()
+    # persist + ONE count materializes the relation AND decides the
+    # small-graph path — r08 spent two sequential driver jobs here
+    # (eager localCheckpoint, then a count over it); folding them
+    # saves a job per call (VERDICT r8 item 3, guide §2.6/§5).
+    deduped = persist(deduped)
+    n_edges = deduped.count()
+    if 0 < small_graph_threshold >= n_edges:
+        # rows cross to the driver only once the graph is known
+        # small; the collect reads the just-populated cache, and
+        # nothing reads the relation after it
+        rows = deduped.collect()
+        deduped.unpersist()
+        return _cc_union_find(edges.sparkSession, rows, deduped.schema)
+    return _cc_star(deduped, max_iterations)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -337,20 +286,8 @@ def _cc_union_find(spark, edge_rows, schema) -> DataFrame:
     return spark.createDataFrame(data, out_schema)
 
 
-def _cc_star(
-    edges: DataFrame, max_iterations: int, pre_deduped: bool = False
-) -> DataFrame:
-    if pre_deduped:
-        cur = edges
-    else:
-        cur = (
-            edges.select(
-                F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+def _cc_star(cur: DataFrame, max_iterations: int) -> DataFrame:
+    """Star rounds over a distinct, self-loop-free (src, dst) relation."""
     for _ in range(max_iterations):
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         changed = (

@@ -797,17 +797,14 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     shingle_k: int = 5,
     min_jaccard: float = 0.5,
-    rarest_first: bool = True,
 ) -> DataFrame:
     """EXACT Jaccard ≥ τ over k-word shingle sets, with prefix filtering
     (PPJoin-style, no false negatives):
 
-    1. a canonical global total order over shingles — by default by global
-       frequency, rarest first (one groupBy + join; prefixes then hold the
-       most selective shingles, measured ~5× fewer candidate pairs than
-       hash order on skewed corpora); ``rarest_first=False`` switches to
-       hash order, which is computed row-locally with zero extra shuffles
-       and wins only when shingle frequencies are near-uniform;
+    1. a canonical global total order over shingles by global frequency,
+       rarest first (one groupBy + join; prefixes then hold the most
+       selective shingles, measured ~5× fewer candidate pairs than hash
+       order on skewed corpora);
     2. each doc indexes only its first ``|s| - ⌈τ·|s|⌉ + 1`` shingles in
        that order — any pair with J ≥ τ must collide inside these
        prefixes (pigeonhole on the canonical order);
@@ -832,15 +829,12 @@ def ngram_jaccard_pairs(
     tall = shingle_sets(df, text_col, id_col, shingle_k).select(
         "id", F.explode("sh_arr").alias("shingle")
     )
-    if rarest_first:
-        # no broadcast hint: the freq table is one row per DISTINCT
-        # shingle — small at test scale (AQE still picks BHJ there) but
-        # unboundedly large at corpus scale, where this must be a
-        # shuffle join on the shingle key
-        freq = tall.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq"))
-        tall = tall.join(freq, on="shingle")
-    else:
-        tall = tall.withColumn("freq", F.xxhash64("shingle"))
+    # no broadcast hint: the freq table is one row per DISTINCT
+    # shingle — small at test scale (AQE still picks BHJ there) but
+    # unboundedly large at corpus scale, where this must be a
+    # shuffle join on the shingle key
+    freq = tall.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq"))
+    tall = tall.join(freq, on="shingle")
 
     # one aggregation yields the full set AND its canonical-order prefix.
     # The (freq, shingle) sort key is ENCODED into one sortable string
@@ -1515,7 +1509,6 @@ def exact_substring_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 8,
-    keep_first: bool = True,
     keep_order_col: str | None = None,
 ) -> DataFrame:
     """Exact duplicated-SUBSTRING removal — the ExactSubstr pass of Lee
@@ -1525,8 +1518,8 @@ def exact_substring_dedup(
     and :func:`line_dedup` needs line boundaries, this removes the
     duplicated SPANS themselves: any run of >= ``k`` tokens that occurs
     more than once anywhere in the corpus is cut out of every occurrence
-    except (with ``keep_first=True``) the globally-first one, and each
-    document's surviving tokens are reassembled in order.
+    except the globally-first one, and each document's surviving tokens
+    are reassembled in order.
 
     Equivalence to the suffix-array formulation: a duplicated substring
     of length >= k contains a duplicated k-gram starting at every offset,
@@ -1588,15 +1581,14 @@ def exact_substring_dedup(
             F.min("__s").alias("__first"),
         )
     )
-    dup = grams.join(firsts, on="h").where(F.col("__cnt") >= 2)
-    if keep_first:
-        dup = dup.where(
-            ~(
-                (F.col("__ord") == F.col("__first.__ord"))
-                & (F.col("id") == F.col("__first.id"))
-                & (F.col("pos") == F.col("__first.pos"))
-            )
+    dup = grams.join(firsts, on="h").where(
+        (F.col("__cnt") >= 2)
+        & ~(
+            (F.col("__ord") == F.col("__first.__ord"))
+            & (F.col("id") == F.col("__first.id"))
+            & (F.col("pos") == F.col("__first.pos"))
         )
+    )
     return _cut_dup_spans(docs, dup.select("id", "pos"), k)
 
 

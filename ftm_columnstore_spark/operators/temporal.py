@@ -359,7 +359,6 @@ def interval_overlap_join(
     end_col: str = "end",
     key: str | None = None,
     bucket_width: int = 3600,
-    check_spans: bool = True,
     max_buckets_per_interval: int = 64,
 ) -> DataFrame:
     """Interval OVERLAP join: pairs (l, r) whose half-open integer
@@ -379,11 +378,11 @@ def interval_overlap_join(
     reports the pair — every other shared bucket drops it in the
     residual.
 
-    Replication is bounded by span length / W. ``check_spans`` spends
-    one cheap max() job per input to REFUSE intervals touching more
-    than ``max_buckets_per_interval`` buckets (the house bounded-
-    expansion rule: a degenerate month-long interval at W=60s would
-    fan out 43k rows); pick ``bucket_width`` near the typical span.
+    Replication is bounded by span length / W. One cheap max() job per
+    input REFUSES intervals touching more than
+    ``max_buckets_per_interval`` buckets (the house bounded-expansion
+    rule: a degenerate month-long interval at W=60s would fan out 43k
+    rows); pick ``bucket_width`` near the typical span.
 
     Output: (left_id, right_id[, key], overlap_start, overlap_end) —
     all integers, overlap_end exclusive."""
@@ -407,22 +406,19 @@ def interval_overlap_join(
         out = df.select(*cols).where(
             F.col(f"{side}_end") > F.col(f"{side}_start")
         )
-        if check_spans:
-            worst = out.agg(
-                F.max(
-                    F.expr(
-                        f"({side}_end - 1) DIV {w} - {side}_start DIV {w}"
-                    )
-                ).alias("b")
-            ).collect()[0]["b"]
-            if worst is not None and worst + 1 > max_buckets_per_interval:
-                raise ValueError(
-                    f"{side} side has an interval touching {worst + 1} "
-                    f"buckets > max_buckets_per_interval="
-                    f"{max_buckets_per_interval}: raise bucket_width "
-                    "toward the typical span (or the cap, if the fan-out "
-                    "is a conscious choice)."
-                )
+        worst = out.agg(
+            F.max(
+                F.expr(f"({side}_end - 1) DIV {w} - {side}_start DIV {w}")
+            ).alias("b")
+        ).collect()[0]["b"]
+        if worst is not None and worst + 1 > max_buckets_per_interval:
+            raise ValueError(
+                f"{side} side has an interval touching {worst + 1} "
+                f"buckets > max_buckets_per_interval="
+                f"{max_buckets_per_interval}: raise bucket_width "
+                "toward the typical span (or the cap, if the fan-out "
+                "is a conscious choice)."
+            )
         return out.withColumn(
             "__b",
             F.explode(

@@ -56,17 +56,13 @@ def latest_judgements(xref: DataFrame) -> DataFrame:
     )
 
 
-def accepted_edges(
-    xref: DataFrame, min_score: float = 0.9, auto_accept: bool = True
-) -> DataFrame:
-    """Edges feeding canonicalization: judgement == positive, or (when
-    auto-accepting) unjudged pairs above the score threshold."""
+def accepted_edges(xref: DataFrame, min_score: float = 0.9) -> DataFrame:
+    """Edges feeding canonicalization: judgement == positive, or
+    unjudged pairs at or above the score threshold."""
     latest = latest_judgements(xref)
-    cond = F.col("judgement") == "positive"
-    if auto_accept:
-        cond = cond | (
-            F.col("judgement").isNull() & (F.col("score") >= min_score)
-        )
+    cond = (F.col("judgement") == "positive") | (
+        F.col("judgement").isNull() & (F.col("score") >= min_score)
+    )
     return latest.filter(cond).select("left_id", "right_id")
 
 

@@ -15,7 +15,8 @@ query returns *whole* Payment entities with all their props (F10). So:
    entity matches when every flag is set. One shuffle on canonical_id,
    carrying only the matching rows, whatever the number of criteria
    (a reverse filter stays a semi-join: it matches statements outside
-   the metadata filter);
+   the metadata filter; ``<prop>__null=True`` is an anti-join, since an
+   entity that lacks the prop has no statement to flag);
 3. surviving entities are re-expanded to all their statements and
    assembled (§2.6), ordered (numeric-coercing, O1), sliced (O2).
 
@@ -86,17 +87,27 @@ def _meta_predicate(c: Criterion) -> F.Column:
     return _compare(F.col(c.field), c.comparator, c.value)
 
 
+def _lacks_prop(c: Criterion) -> bool:
+    """``<prop>__null=True``: the entity has no statement of the prop."""
+    return c.is_prop and c.comparator == "null" and bool(c.value)
+
+
 def _scoped(statements: DataFrame, q: Query) -> DataFrame:
     """Statements under ``q``'s metadata criteria (pushed down to the
-    scan) and reverse filters (F7: entities referencing a given id, looked
-    up over all statements, so a reference from outside the metadata
-    filter still counts)."""
+    scan), missing-prop criteria (entities with no statement of the prop
+    under those criteria) and reverse filters (F7: entities referencing
+    a given id, looked up over all statements, so a reference from
+    outside the metadata filter still counts)."""
     df = statements
     for c in q.criteria:
         if not c.is_prop and c.field != "reverse":
             df = df.filter(_meta_predicate(c))
+    meta = df
     for c in q.criteria:
-        if c.field == "reverse":
+        if _lacks_prop(c):
+            has = meta.filter(F.col("prop") == c.field).select("canonical_id")
+            df = df.join(has, on="canonical_id", how="left_anti")
+        elif c.field == "reverse":
             ids = reverse_ids(statements, str(c.value))
             df = df.join(ids, on="canonical_id", how="left_semi")
     return df
@@ -104,12 +115,12 @@ def _scoped(statements: DataFrame, q: Query) -> DataFrame:
 
 def _criteria(q: Query) -> list[F.Column]:
     """One statement predicate per entity-level criterion: each prop
-    criterion, then the search (F8: case-insensitive containment over
-    searchable values)."""
+    criterion that a statement can meet, then the search (F8:
+    case-insensitive containment over searchable values)."""
     preds = [
         (F.col("prop") == c.field) & _compare(F.col("value"), c.comparator, c.value)
         for c in q.criteria
-        if c.is_prop
+        if c.is_prop and not _lacks_prop(c)
     ]
     if q.search_term:
         preds.append(

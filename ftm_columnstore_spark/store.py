@@ -210,9 +210,7 @@ class Store:
         return os.path.exists(self._path)
 
     # --- write path (S2-S5) -------------------------------------------------
-    def write_statements(
-        self, df: DataFrame, mode: str = "append", cluster: bool = True
-    ) -> None:
+    def write_statements(self, df: DataFrame, cluster: bool = True) -> None:
         """Append statements, partitioned by dataset, entity-clustered.
 
         ``cluster=False`` skips the repartition+sort and appends the
@@ -234,7 +232,7 @@ class Store:
             out = out.repartition("dataset", "canonical_id").sortWithinPartitions(
                 "canonical_id", "entity_id", "prop", "value"
             )
-        out.write.mode(mode).partitionBy("dataset").parquet(self._path)
+        out.write.mode("append").partitionBy("dataset").parquet(self._path)
 
     def write_entities(
         self,
@@ -750,27 +748,32 @@ class Store:
         compacted (the affected partitions are re-deduped in the same
         pass and the others were already clean); an uncompacted store
         stays on dedup-on-read — pop no longer compacts the whole store
-        as a side effect."""
-        popped = self.statements().filter(
-            (F.col("entity_id") == entity_id)
-            | (F.col("canonical_id") == entity_id)
-        ).collect()
-        if not popped:
-            return []
-        # affected partitions from the RAW rows (what the keep filter
-        # below actually removes — resolver remaps don't move files)
-        drop = (F.col("entity_id") == entity_id) | (
+        as a side effect.
+
+        Exactly the returned statements are deleted. Under a resolver
+        the entity is matched by its resolved ``canonical_id``, so the
+        rewrite drops rows by their statement ``id``, not by the raw
+        ids on disk."""
+        match = (F.col("entity_id") == entity_id) | (
             F.col("canonical_id") == entity_id
         )
-        affected = [
-            r["dataset"]
-            for r in self.spark.read.schema(STATEMENT_SCHEMA)
-            .parquet(self._path)
-            .filter(drop)
-            .select("dataset")
-            .distinct()
-            .collect()
-        ]
+        popped = self.statements().filter(match).collect()
+        if not popped:
+            return []
+        if self._canonical is None:
+            # the read returned the on-disk canonical_id, so the same
+            # predicate drops exactly the popped rows; ``id`` alone
+            # would also drop the statement written under another
+            # canonical_id, which excludes it
+            drop = match
+        else:
+            # the remap makes canonical_id a function of entity_id,
+            # which ``id`` hashes: every row with a popped id was popped
+            drop = F.col("id").isin(sorted({r["id"] for r in popped}))
+        # ``id`` hashes the dataset, so the rows of one STATEMENT_KEY
+        # group share it and the popped rows name every partition that
+        # holds a dropped row
+        affected = sorted({r["dataset"] for r in popped})
         was_clean = self.is_compacted() and self._canonical is None
         # rewrite starts: fail-safe marker invalidation (see optimize)
         self.bump_epoch()
@@ -780,10 +783,6 @@ class Store:
             # ones went through dedup — the whole store still is
             self._set_compacted()
         return popped
-
-    # --- iteration (S6, S7) ----------------------------------------------------
-    def iterate_statements(self, dataset: str | None = None):
-        yield from self.statements(dataset).sort("canonical_id").toLocalIterator()
 
 
 @cache

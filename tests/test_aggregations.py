@@ -65,23 +65,20 @@ def test_stats(statements):
     assert res["countries"]["de"] == 3
 
 
-def test_dataset_stats_approx_close_to_exact(statements):
+def test_dataset_stats(statements):
+    from collections import Counter, defaultdict
+
     from ftm_columnstore_spark.operators.aggregations import dataset_stats
 
-    exact = {
+    ents, stmts = defaultdict(set), Counter()
+    for r in statements.select("dataset", "schema", "canonical_id").collect():
+        ents[r["dataset"], r["schema"]].add(r["canonical_id"])
+        stmts[r["dataset"], r["schema"]] += 1
+    got = {
         (r["dataset"], r["schema"]): (r["entities"], r["statements"])
         for r in dataset_stats(statements).collect()
     }
-    approx = {
-        (r["dataset"], r["schema"]): (r["entities"], r["statements"])
-        for r in dataset_stats(statements, approx=True).collect()
-    }
-    assert set(exact) == set(approx)
-    for k, (e_ents, e_stmts) in exact.items():
-        a_ents, a_stmts = approx[k]
-        assert a_stmts == e_stmts              # statement count stays exact
-        # p=12 → ~1.6% σ; tiny groups hit linear counting (near-exact)
-        assert abs(a_ents - e_ents) <= max(2, 0.1 * e_ents), k
+    assert got == {k: (len(v), stmts[k]) for k, v in ents.items()}
 
 
 def test_snapshot_diff_hand_computed(spark):

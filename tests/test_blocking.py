@@ -102,15 +102,16 @@ def test_connected_components_chain(spark):
 
 
 def test_connected_components_star_long_chain(spark):
-    # 200-node chain: diameter 199. Label propagation needs ~200 rounds;
-    # large-star/small-star must collapse it within its default budget.
+    # 200-node chain: diameter 199. Min-label propagation would need ~200
+    # rounds; large-star/small-star must collapse it within its default
+    # budget.
     edges = spark.createDataFrame(
         [(f"n{i:04d}", f"n{i+1:04d}") for i in range(199)],
         ["left_id", "right_id"],
     )
     cmap = {
         r["entity_id"]: r["canonical_id"]
-        for r in connected_components(edges, algorithm="star").collect()
+        for r in connected_components(edges).collect()
     }
     assert len(cmap) == 200
     assert set(cmap.values()) == {"n0000"}
@@ -142,17 +143,16 @@ def test_connected_components_algorithms_agree(spark):
     seen = {n for ab in edges_py for n in ab}
     expected = {n: find(n) for n in seen}
     # find() roots are component-minimum ids because unions keep the min.
-    # threshold=0 forces the DISTRIBUTED paths; the default exercises the
-    # small-graph union-find fast path — all three must agree.
-    for algo in ("star", "label"):
-        for thr in (0, 100_000):
-            cmap = {
-                r["entity_id"]: r["canonical_id"]
-                for r in connected_components(
-                    edges, algorithm=algo, small_graph_threshold=thr
-                ).collect()
-            }
-            assert cmap == expected, (algo, thr)
+    # threshold=0 forces the DISTRIBUTED star rounds; the default
+    # exercises the small-graph union-find fast path — both must agree.
+    for thr in (0, 100_000):
+        cmap = {
+            r["entity_id"]: r["canonical_id"]
+            for r in connected_components(
+                edges, small_graph_threshold=thr
+            ).collect()
+        }
+        assert cmap == expected, thr
 
 
 def test_connected_components_edges_deduped_flag(spark):
@@ -245,7 +245,7 @@ def test_connected_components_property(spark, edges_py):
     cmap = {
         r["entity_id"]: r["canonical_id"]
         for r in connected_components(
-            edges, algorithm="star", small_graph_threshold=0
+            edges, small_graph_threshold=0
         ).collect()
     }
     assert cmap == expected

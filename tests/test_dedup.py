@@ -439,7 +439,7 @@ def test_exact_substring_dedup_preserves_original_bytes(spark):
     assert out[3]["n_removed"] == 8
 
 
-def test_exact_substring_dedup_within_doc_and_no_keep(spark):
+def test_exact_substring_dedup_within_doc(spark):
     from ftm_columnstore_spark.operators.dedup import exact_substring_dedup
 
     span = "a1 a2 a3 a4 a5 a6 a7 a8"  # exactly k tokens
@@ -451,11 +451,6 @@ def test_exact_substring_dedup_within_doc_and_no_keep(spark):
     # separator of the cut span survives → trailing space)
     assert out["text"] == f"{span} mid "
     assert out["n_removed"] == 8
-
-    out2 = exact_substring_dedup(df, k=8, keep_first=False).collect()[0]
-    # keep_first=False removes every occurrence
-    assert out2["text"] == " mid "
-    assert out2["n_removed"] == 16
 
     with pytest.raises(ValueError):
         exact_substring_dedup(df, k=1)

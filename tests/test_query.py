@@ -32,6 +32,25 @@ def test_prop_comparator_filter(statements):
     assert got == ["pay-2", "pay-3"]
 
 
+def test_prop_null_criterion(spark):
+    """``<prop>__null=True`` matches entities that lack the prop;
+    ``False`` those that have it."""
+    from ftm_columnstore_spark.sources.statements import statements_from_rows
+
+    rows = [
+        dict(id="a1", entity_id="a", prop="name", value="A"),
+        dict(id="b1", entity_id="b", prop="name", value="B"),
+        dict(id="b2", entity_id="b", prop="birthDate", value="1970-01-01"),
+    ]
+    stmts = statements_from_rows(
+        spark, [dict(r, schema="Person", dataset="d") for r in rows]
+    )
+    assert ids(stmts, Q().where(birthDate__null=True)) == ["a"]
+    assert ids(stmts, Q().where(birthDate__null=False)) == ["b"]
+    assert ids(stmts, Q().where(birthDate__null=True, name="B")) == []
+    assert ids(stmts, Q().where(birthDate__null=True).order_by("name")) == ["a"]
+
+
 def test_whole_entity_returned_after_prop_filter(statements):
     # F10: date-filtered payments still carry all their props
     ents = compile_entities(

@@ -186,6 +186,55 @@ def test_pop_removes_entity(store, entities_df):
     assert store.pop("no-such-entity") == []
 
 
+def test_pop_under_resolver_deletes_what_it_returns(store, spark):
+    """Under a resolver b→a, pop("a") returns a's and b's statements,
+    and deletes exactly those: b's rows carry canonical_id b on disk."""
+    from ftm_columnstore_spark.sources.statements import statements_from_rows
+
+    store.write_statements(
+        statements_from_rows(
+            spark,
+            [
+                dict(id=f"s-{e}", entity_id=e, prop="name", schema="Person",
+                     value=e.upper(), dataset="d", last_seen=None)
+                for e in ("a", "b", "c")
+            ],
+        )
+    )
+    store.set_resolver(
+        spark.createDataFrame([("b", "a")], ["entity_id", "canonical_id"])
+    )
+    popped = store.pop("a")
+    assert sorted((r["entity_id"], r["canonical_id"]) for r in popped) == [
+        ("a", "a"), ("b", "a")
+    ]
+    assert [
+        (r["entity_id"], r["canonical_id"])
+        for r in store.statements().collect()
+    ] == [("c", "c")]
+
+
+def test_pop_keeps_same_statement_under_other_canonical(store, spark):
+    """Without a resolver, the statement s1 written under c-old and
+    under c-new is two statements: pop("c-old") returns and deletes only
+    the c-old one, although both rows share the id s1."""
+    from ftm_columnstore_spark.sources.statements import statements_from_rows
+
+    for canon in ("c-old", "c-new"):
+        store.write_statements(
+            statements_from_rows(
+                spark,
+                [dict(id="s1", entity_id="e", prop="name", schema="Person",
+                      value="A", dataset="d", last_seen=None)],
+            ).withColumn("canonical_id", F.lit(canon))
+        )
+    popped = store.pop("c-old")
+    assert [r["canonical_id"] for r in popped] == ["c-old"]
+    assert [
+        r["canonical_id"] for r in store.statements().collect()
+    ] == ["c-new"]
+
+
 def test_fingerprint_side_write(store, entities_df):
     store.write_entities(
         entities_df, last_seen="2024-01-01 00:00:00", with_fingerprints=True

@@ -54,7 +54,7 @@ def test_latest_judgement_wins(spark):
     assert latest == {("a", "b"): "positive", ("c", "d"): "positive"}
     edges = {
         (r["left_id"], r["right_id"])
-        for r in accepted_edges(xref, auto_accept=False).collect()
+        for r in accepted_edges(xref).collect()
     }
     assert edges == {("a", "b"), ("c", "d")}
 
