@@ -42,6 +42,12 @@ from ftm_columnstore_spark.sources.statements import entities_to_statements
 #: dataset partitions smaller than this share one compaction rewrite job
 #: (see ``Store._group_datasets``)
 REWRITE_BATCH_BYTES = 4 << 30
+#: a compacted store or value index of at most this many data bytes
+#: reads as one partition (see ``Store.statements``). Set from the
+#: serve corpus k-fold on 4 cores: one partition assembled every entity
+#: of a 1.06 MB store faster (0.53 vs 0.71 s) and of a 1.6 MB one slower
+#: (0.93 vs 0.80 s), while the View mix kept its gain up to 3 MB.
+SMALL_STORE_BYTES = 1 << 20
 
 
 def dedup_statements(df: DataFrame) -> DataFrame:
@@ -65,6 +71,64 @@ def dedup_statements(df: DataFrame) -> DataFrame:
     )
 
 
+def _write_json(path: str, payload) -> None:
+    """Write ``payload`` to ``path`` whole or not at all (tmp + rename)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(payload, fh)
+    os.replace(tmp, path)
+
+
+def _read_marker(path: str) -> dict | None:
+    """An ``{"epoch": N, ...}`` marker, or None when it is missing,
+    unreadable or a pre-epoch legacy marker (fail-safe: the reader
+    takes the slower path, never a wrong one)."""
+    try:
+        with open(path) as fh:
+            payload = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    if not isinstance(payload, dict) or "epoch" not in payload:
+        return None
+    return payload
+
+
+def _inventory(root: str) -> dict[str, int]:
+    """Relative path → size for every file under ``root``."""
+    inv: dict[str, int] = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            p = os.path.join(dirpath, fn)
+            try:
+                inv[os.path.relpath(p, root)] = os.path.getsize(p)
+            except OSError:
+                pass
+    return inv
+
+
+def _data_bytes(inv: dict[str, int]) -> int:
+    """Bytes of the files a parquet scan reads: Spark skips names that
+    start with ``_`` or ``.`` (``_SUCCESS``, checksums)."""
+    return sum(
+        size
+        for rel, size in inv.items()
+        if not os.path.basename(rel).startswith(("_", "."))
+    )
+
+
+def _one_partition_if_small(df: DataFrame, marker: dict) -> DataFrame:
+    """The small-store rule (see :meth:`Store.statements`): ``df`` as ONE
+    partition when ``marker`` records at most ``SMALL_STORE_BYTES`` of
+    data. A serving call then pays one stage, not one per shuffle, for
+    work measured in milliseconds. ``coalesce`` is a narrow dependency,
+    so filters still push into the scan. A marker without a byte count
+    means size unknown: no change."""
+    size = marker.get("bytes")
+    if isinstance(size, int) and size <= SMALL_STORE_BYTES:
+        return df.coalesce(1)
+    return df
+
+
 def _scoped(df: DataFrame, dataset: str | list[str] | None) -> DataFrame:
     """Rows of one dataset or a catalog (list) of them; all when None."""
     if isinstance(dataset, str):
@@ -84,6 +148,9 @@ class Store:
         self._marker = os.path.join(self.uri, "_compacted")
         self._epoch_file = os.path.join(self.uri, "_epoch")
         self._inventory_file = os.path.join(self.uri, "_compacted_inventory")
+        self._index_path = os.path.join(self.uri, "value_index")
+        # inside the index directory, so it is swapped in with the index
+        self._index_marker = os.path.join(self._index_path, "_built")
         self._canonical: DataFrame | None = None
         self._bucketed: str | None = None
 
@@ -128,58 +195,40 @@ class Store:
         os.replace(tmp, self._epoch_file)
         return epoch
 
-    def _inventory(self) -> dict[str, int]:
-        """Relative path → size for every file under the statement path
-        (recorded beside the marker; compared only by
-        verify_compacted())."""
-        inv: dict[str, int] = {}
-        for dirpath, _dirs, files in os.walk(self._path):
-            for fn in files:
-                p = os.path.join(dirpath, fn)
-                try:
-                    inv[os.path.relpath(p, self._path)] = os.path.getsize(p)
-                except OSError:
-                    pass
-        return inv
-
     def _set_compacted(self) -> None:
         # inventory in its OWN file: the marker stays a few bytes so
         # the per-DataFrame-build is_compacted() parse is O(1) even
         # when the store holds millions of files; only the deep
-        # verify_compacted() reads the (store-sized) inventory
-        inv_tmp = self._inventory_file + ".tmp"
-        with open(inv_tmp, "w") as fh:
-            json.dump(self._inventory(), fh)
-        os.replace(inv_tmp, self._inventory_file)
-        tmp = self._marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"epoch": self._read_epoch()}, fh)
-        os.replace(tmp, self._marker)
+        # verify_compacted() reads the (store-sized) inventory. The
+        # marker carries the data bytes for the small-store rule (see
+        # statements()), so reads never walk the store to size it.
+        inv = _inventory(self._path)
+        _write_json(self._inventory_file, inv)
+        _write_json(
+            self._marker, {"epoch": self._read_epoch(), "bytes": _data_bytes(inv)}
+        )
 
     def _clear_compacted(self) -> None:
         if os.path.exists(self._marker):
             os.remove(self._marker)
 
-    def _marker_payload(self) -> dict | None:
-        try:
-            with open(self._marker) as fh:
-                payload = json.load(fh)
-            if not isinstance(payload, dict) or "epoch" not in payload:
-                return None
-            return payload
-        except (OSError, ValueError):
-            # missing, or a pre-epoch legacy marker: treat as not
-            # compacted (fail-safe — costs one dedup, never skips one)
+    def _current(self, marker: str) -> dict | None:
+        """The payload of ``marker`` if it was written at the current
+        write epoch, else None."""
+        payload = _read_marker(marker)
+        if payload is None or payload["epoch"] != self._read_epoch():
             return None
+        return payload
 
     def is_compacted(self) -> bool:
         """True iff the compaction marker exists AND no in-contract
         write happened since it was set (marker epoch == current
         epoch). Two small metadata reads per DataFrame build — no
         directory walk, no mtime comparison (see the epoch contract
-        above for what out-of-contract writers must do)."""
-        payload = self._marker_payload()
-        return payload is not None and payload["epoch"] == self._read_epoch()
+        above for what out-of-contract writers must do). A missing or
+        pre-epoch legacy marker reads as not compacted (fail-safe —
+        costs one dedup, never skips one)."""
+        return self._current(self._marker) is not None
 
     def verify_compacted(self) -> bool:
         """Deep check for ops tooling: epoch match AND the on-disk file
@@ -187,15 +236,14 @@ class Store:
         recorded at compaction time — detects out-of-contract writers
         that added/replaced files without bumping the epoch, including
         mtime-preserving placements (``mv``, ``rsync -a``)."""
-        payload = self._marker_payload()
-        if payload is None or payload["epoch"] != self._read_epoch():
+        if not self.is_compacted():
             return False
         try:
             with open(self._inventory_file) as fh:
                 recorded = json.load(fh)
         except (OSError, ValueError):
             return False
-        return recorded == self._inventory()
+        return recorded == _inventory(self._path)
 
     # --- DDL (S8, S9) -------------------------------------------------------
     def ensure(self) -> None:
@@ -310,11 +358,27 @@ class Store:
         concurrent writers in other processes — consistent with the
         store's single-writer design.
 
+        Small-store rule: a compacted store whose data is at most
+        ``SMALL_STORE_BYTES`` (1 MB, about 30k statements) is read as
+        a single partition (``coalesce(1)``), so every canonical_id-keyed
+        aggregate above it — the frontier, entity assembly, dedup under a
+        resolver, grouped aggregations, ``stats()`` — plans with no hash
+        or range Exchange. The rule holds for every reader, bulk ones
+        (export, xref, CLI stats) included: the limit is where a full
+        assembly in one task stops beating the shuffled plan. The
+        resolver's own join still shuffles when its map has no size
+        estimate to broadcast by (one built from Python rows); a map read
+        from parquet is broadcast. Uncompacted stores (many small
+        appended files), larger ones, stores compacted before the byte
+        count was recorded and the bucketed snapshot keep their
+        partitioning.
+
         With :meth:`use_bucketed` enabled, reads serve from the
         bucketed snapshot table instead of the parquet store — same
         columns, same filters, zero-Exchange plans for every
         canonical_id-keyed consumer; see that method for the staleness
         contract."""
+        marker = None
         if self._bucketed is not None:
             # snapshot was written from statements() (already deduped);
             # treated like a compacted store: fast path unless a
@@ -325,13 +389,18 @@ class Store:
             if not self.exists():
                 return self.spark.createDataFrame([], STATEMENT_SCHEMA)
             df = self.spark.read.schema(STATEMENT_SCHEMA).parquet(self._path)
-            already_clean = self.is_compacted()
+            marker = self._current(self._marker)
+            already_clean = marker is not None
         df = _scoped(df, dataset)
         if as_of is not None:
             df = df.filter(
                 F.col("last_seen") <= F.to_timestamp(F.lit(as_of))
             )
         df = self._apply_canonical(df)
+        if marker is not None:
+            # above the resolver's join: a shuffled join keeps its own
+            # exchange, and the aggregates above still need none
+            df = _one_partition_if_small(df, marker)
         if deduped and self._canonical is None and already_clean:
             # compacted store, no resolver: rows already unique on
             # STATEMENT_KEY — skip the corpus-wide dedup shuffle (the
@@ -429,15 +498,18 @@ class Store:
         only entity-reference statements, range-partitioned and sorted by
         ``value`` — a point lookup prunes to one file via parquet
         min/max, independent of corpus size. Derived artifact: rebuild
-        after bulk writes or resolver changes (like the reference's
-        OPTIMIZE, staleness is operational, not a correctness risk —
-        readers fall back to the main table when absent).
+        after writes (see :meth:`value_index` for when it is read).
 
         Built from the store WITHOUT its resolver: the index holds raw
         ``canonical_id`` values, and :meth:`entity_refs` applies the
-        resolver of whichever store reads it, as the main table does."""
-        path = os.path.join(self.uri, "value_index")
+        resolver of whichever store reads it, as the main table does.
+        A marker inside the index directory records the write epoch
+        the build read and the index's data bytes."""
+        path = self._index_path
         tmp = path + ".build"
+        # read before the build's scan: a write that lands during the
+        # build leaves the index stale, never wrongly current
+        epoch = self._read_epoch()
         resolver, self._canonical = self._canonical, None
         try:
             src = self.statements()
@@ -450,6 +522,10 @@ class Store:
             .write.mode("overwrite")
             .parquet(tmp)
         )
+        _write_json(
+            os.path.join(tmp, os.path.basename(self._index_marker)),
+            {"epoch": epoch, "bytes": _data_bytes(_inventory(tmp))},
+        )
         # same rename-aside discipline as _promote (derived artifact, so
         # a crash here is harmless either way — readers fall back to the
         # main table when the index is absent)
@@ -461,18 +537,31 @@ class Store:
         shutil.rmtree(old, ignore_errors=True)
 
     def value_index(self) -> DataFrame | None:
-        """The value-clustered reverse-lookup copy, or None if not built."""
-        path = os.path.join(self.uri, "value_index")
-        if not os.path.exists(path):
+        """The value-clustered reverse-lookup copy while it is current,
+        else None.
+
+        Staleness contract: the index is current while the write epoch
+        it was built at is still the store's epoch. Any in-contract
+        mutation (write, pop, drop) bumps the epoch, so from then on
+        this returns None and readers fall back to the main table until
+        :meth:`build_value_index` runs again. :meth:`optimize` bumps the
+        epoch too but changes no deduped row, so it carries an index
+        that was current when it started over to the new epoch. An index
+        without a marker (built before markers were written) is never
+        current. The small-store rule of :meth:`statements` applies to
+        the index by its own recorded size."""
+        marker = self._current(self._index_marker)
+        if marker is None:
             return None
-        return self.spark.read.schema(STATEMENT_SCHEMA).parquet(path)
+        idx = self.spark.read.schema(STATEMENT_SCHEMA).parquet(self._index_path)
+        return _one_partition_if_small(idx, marker)
 
     def entity_refs(self, dataset: str | list[str] | None = None) -> DataFrame:
         """Entity-reference statements (``prop_type='entity'``) of
         ``dataset`` (as in :meth:`statements`), served from the value
-        index when built (file-pruned point lookups), falling back to a
-        filtered scan of the main table. Both paths carry the resolver's
-        ``canonical_id``."""
+        index while it is current (file-pruned point lookups), else from
+        a filtered scan of the main table. Both paths carry the
+        resolver's ``canonical_id``."""
         idx = self.value_index()
         if idx is None:
             return self.statements(dataset).filter(F.col("prop_type") == "entity")
@@ -712,12 +801,16 @@ class Store:
                 .distinct()
                 .collect()
             ]
+        index = self._current(self._index_marker)
         # the physical rewrite begins: stale the marker up front so a
         # crash mid-loop fails safe (dedup-on-read resumes)
         self.bump_epoch()
         self._rewrite_datasets(datasets, slices=slices)
         if full:
             self._set_compacted()
+        if index is not None:
+            # compaction changes no deduped row: a current index stays so
+            _write_json(self._index_marker, {**index, "epoch": self._read_epoch()})
 
     def changed_statements(self, since: str) -> DataFrame:
         """Delta read: statements (re)written after ``since`` — the

@@ -9,8 +9,12 @@ deviations from the running mean at the time of processing.
 
 This is the shape any custom stateful operator takes on Spark: state is an
 arbitrary tuple per key, batches arrive as pandas frames, timeouts expire
-idle keys. Works identically under a real stream or
-``trigger(availableNow=True)`` backfill.
+idle keys. A ``trigger(availableNow=True)`` backfill emits the same rows as
+a real stream, but with a processing-time idle timeout (the default) the
+query does not end by itself: Spark keeps running no-data batches to
+expire idle keys, and ``processAllAvailable()`` does not return either.
+Stop such a backfill once its progress reports the input committed; with
+``idle_timeout_ms=None`` it ends on its own.
 """
 
 from __future__ import annotations

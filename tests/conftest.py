@@ -46,6 +46,17 @@ def cache_empty(spark):
     return spark._jsparkSession.sharedState().cacheManager().isEmpty
 
 
+@pytest.fixture
+def small_store_rule_off(monkeypatch):
+    """A call that forces the small-store rule of ``Store.statements()``
+    and ``Store.value_index()`` off until the test ends (no store holds
+    fewer than zero bytes), so a small compacted store plans as a large
+    one would."""
+    from ftm_columnstore_spark import store
+
+    return lambda: monkeypatch.setattr(store, "SMALL_STORE_BYTES", -1)
+
+
 def entity(id, schema, dataset, **props):
     return {
         "id": id,

@@ -3,7 +3,11 @@ contract, so the plan properties README promises are pinned here —
 partition pruning on dataset, WindowGroupLimit for the dedup window,
 TakeOrderedAndProject for top-k, partial aggregation before exchanges.
 A refactor that silently turns one of these into a full scan / global
-sort / single-stage agg fails the suite, not just the benchmark."""
+sort / single-stage agg fails the suite, not just the benchmark.
+
+The store-backed guards pin the plans of a store too large for the
+small-store rule, which reads a small compacted store as one partition
+(its plans are pinned in tests/test_view.py): the rule is forced off."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,7 +20,8 @@ def _plan(df) -> str:
 
 
 @pytest.fixture()
-def pstore(spark, tmp_path, entities_df):
+def pstore(spark, tmp_path, entities_df, small_store_rule_off):
+    small_store_rule_off()
     s = Store(spark, str(tmp_path / "pstore"))
     s.ensure()
     s.write_entities(entities_df, last_seen="2024-01-01 00:00:00")

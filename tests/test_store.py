@@ -4,7 +4,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from ftm_columnstore_spark.store import Store, dedup_statements
+from ftm_columnstore_spark.store import SMALL_STORE_BYTES, Store, dedup_statements
 
 
 @pytest.fixture()
@@ -365,6 +365,72 @@ def test_view_inverted_uses_index(store, entities_df):
     before = sorted(v.get_inverted(ref_id))
     store.build_value_index()
     assert sorted(v.get_inverted(ref_id)) == before
+
+
+def test_stale_value_index_is_not_read(store, spark, entities_df):
+    """The value index answers only while the write epoch it was built
+    at is current: after a pop or an append, reverse lookups come from
+    the main table until the index is rebuilt."""
+    from ftm_columnstore_spark.sources.statements import statements_from_rows
+
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    store.build_value_index()
+    v = store.view()
+    assert sorted(v.get_inverted("org-beta")) == [
+        ("paymentsMade", "pay-1"), ("paymentsReceived", "pay-3")]
+    store.pop("pay-1")
+    assert store.value_index() is None
+    assert sorted(v.get_inverted("org-beta")) == [("paymentsReceived", "pay-3")]
+    store.build_value_index()
+    assert store.value_index() is not None
+    assert sorted(v.get_inverted("org-beta")) == [("paymentsReceived", "pay-3")]
+    update = statements_from_rows(
+        spark,
+        [dict(id="upd-1", entity_id="pay-9", prop="payer", prop_type="entity",
+              schema="Payment", value="org-beta", dataset="grants",
+              last_seen=None)],
+    ).withColumn("last_seen", F.to_timestamp(F.lit("2024-06-01")))
+    store.write_statements(update)
+    assert sorted(v.get_inverted("org-beta")) == [
+        ("paymentsMade", "pay-9"), ("paymentsReceived", "pay-3")]
+
+
+def test_optimize_keeps_a_current_value_index(store, entities_df):
+    """Compaction changes no deduped row: an index current before
+    ``optimize()`` is current after it; a stale one stays stale."""
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    store.write_entities(entities_df, last_seen="2024-02-01 00:00:00")
+    store.build_value_index()
+    store.optimize(slices=2)
+    assert store.value_index() is not None
+    assert sorted(store.view().get_inverted("org-beta")) == [
+        ("paymentsMade", "pay-1"), ("paymentsReceived", "pay-3")]
+    store.pop("pay-1")
+    store.optimize()
+    assert store.value_index() is None
+
+
+def test_small_store_rule_needs_a_recorded_size(store, entities_df):
+    """A compacted store reads as one partition only when its marker
+    records a size within the limit; a marker written before sizes were
+    recorded keeps the partitioned plan."""
+    import json
+
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    store.optimize()
+
+    def plan():
+        return store.statements()._jdf.queryExecution().executedPlan().toString()
+
+    with open(store._marker) as fh:
+        marker = json.load(fh)
+    assert 0 < marker["bytes"] <= SMALL_STORE_BYTES
+    assert "Coalesce 1" in plan()
+    del marker["bytes"]
+    with open(store._marker, "w") as fh:
+        json.dump(marker, fh)
+    assert store.is_compacted()
+    assert "Coalesce 1" not in plan()
 
 
 def test_resolved_view_inverted_unchanged_by_value_index(store, spark, entities_df):

@@ -1,6 +1,7 @@
 """Structured Streaming: ingest round-trip + windowed aggs (SURVEY §2.11)."""
 
 import json
+import time
 
 from pyspark.sql import functions as F
 
@@ -164,7 +165,16 @@ def test_stateful_anomaly_operator(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # under the default processing-time idle timeout the query keeps
+    # running no-data batches and never ends by itself, nor does
+    # processAllAvailable() return: stop it once the input is committed
+    deadline = time.monotonic() + 120
+    try:
+        while sum(p["numInputRows"] for p in q.recentProgress) < len(rows):
+            assert time.monotonic() < deadline, "input never committed"
+            q.awaitTermination(0.1)
+    finally:
+        q.stop()
     out = spark.sql("select * from anoms").collect()
     assert [r["event_id"] for r in out] == [99]
     assert out[0]["zscore"] > 3

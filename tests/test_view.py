@@ -100,3 +100,103 @@ def test_warm_view_mix_compiles_no_code(spark, view):
     before = compilations.getCount()
     mix()
     assert compilations.getCount() - before == 0
+
+
+@pytest.fixture()
+def compacted(spark, tmp_path, entities_df):
+    """A small compacted store with a current value index: the store
+    the small-store rule reads as one partition."""
+    store = Store(spark, str(tmp_path / "c"))
+    store.ensure()
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    store.optimize()
+    store.build_value_index()
+    return store
+
+
+def _sorted_lists(x):
+    """``x`` with every list sorted, so results compare as sets where the
+    API promises no order."""
+    if isinstance(x, dict):
+        return {k: _sorted_lists(v) for k, v in x.items()}
+    if isinstance(x, list):
+        return sorted((_sorted_lists(v) for v in x), key=repr)
+    return x
+
+
+def _serve_mix(view) -> dict:
+    """The View calls of the serve mix, their results made comparable."""
+    top = Q().where(schema="Payment").order_by("amountEur", ascending=False)
+    return {
+        "by_country": _sorted_lists(list(view.entities(Q().where(country="de")))),
+        "search": _sorted_lists(list(view.entities(Q().search("agency")))),
+        "top": [e["id"] for e in view.entities(top[:2])],
+        "sum_by_year": view.aggregations(
+            Q().where(schema="Payment").aggregate("sum", "amountEur", groups="year")
+        ),
+        "count_by_country": view.aggregations(
+            Q().aggregate("count", "id", groups="country")
+        ),
+        "stats": view.stats(),
+        "entity": _sorted_lists(view.get_entity("org-acme")),
+        "adjacent": sorted(view.get_adjacent("per-carol")),
+        "inverted": sorted(view.get_inverted("org-acme")),
+    }
+
+
+def test_single_partition_read_matches_partitioned(
+    compacted, small_store_rule_off
+):
+    one = _serve_mix(compacted.view())
+    small_store_rule_off()
+    assert _serve_mix(compacted.view()) == one
+    assert one["top"] == ["pay-2", "pay-1"]
+    assert one["stats"]["entity_count"] == 10
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_single_partition_view_plans_shuffle_nothing(
+    compacted, small_store_rule_off
+):
+    """On a small compacted store the View's canonical_id aggregates
+    need no hash or range Exchange (broadcasts remain); the dataset and
+    canonical_id filters still reach the scan. With the rule off the
+    same plans shuffle."""
+    from ftm_columnstore_spark.operators.assembly import get_entity
+    from ftm_columnstore_spark.operators.graph import adjacent, inverted
+    from ftm_columnstore_spark.plans.compiler import (
+        compile_aggregation_df,
+        compile_entities,
+    )
+    from ftm_columnstore_spark.plans.query import Aggregation
+
+    def plans(store) -> dict[str, str]:
+        stmts = store.statements()
+        top = Q().where(schema="Payment").order_by("amountEur", ascending=False)
+        return {
+            "by_country": _plan(compile_entities(stmts, Q().where(country="de"))),
+            "search": _plan(compile_entities(stmts, Q().search("agency"))),
+            "top": _plan(compile_entities(stmts, top[:2])),
+            "aggregation": _plan(compile_aggregation_df(
+                stmts, Q(), Aggregation("count", "id", "country"))),
+            "entity": _plan(get_entity(stmts, "org-acme")),
+            "adjacent": _plan(adjacent(stmts, "per-carol")),
+            "inverted": _plan(inverted(store.entity_refs(), "org-acme")),
+        }
+
+    for name, plan in plans(compacted).items():
+        assert "Coalesce 1" in plan, name
+        assert "Exchange hashpartitioning" not in plan, name
+        assert "rangepartitioning" not in plan, name
+    point = _plan(
+        compacted.statements(dataset="grants").filter("canonical_id = 'org-acme'")
+    )
+    assert "dataset" in point.split("PartitionFilters", 1)[1][:200]
+    assert "canonical_id" in point.split("PushedFilters", 1)[1][:200]
+    small_store_rule_off()
+    off = plans(compacted)
+    assert not any("Coalesce 1" in plan for plan in off.values())
+    assert "Exchange hashpartitioning" in off["by_country"]
