@@ -19,6 +19,16 @@ through :func:`persist`, and is released by these rules:
   (``streaming/release.py``).
 
 The open registry is a contextvar, so each thread has its own.
+
+One cache lives outside this contract: the ``Store``'s copy of a small
+compacted store and of its value index (``store.Store._small_copy``).
+It is a local checkpoint, not a persist, so it never enters the
+CacheManager and ``clearCache()`` does not release it. The ``Store``
+owns it: one copy per directory, read once per compaction and keyed on
+the compaction (or index) marker, released by the Store at the first
+read after the marker changes and by ``drop()``, and read again from
+parquet when its block is lost. An empty CacheManager after a View mix
+therefore still holds.
 """
 
 from __future__ import annotations

@@ -11,8 +11,10 @@ or keep it incrementally fresh with the Structured Streaming job in
 
 from __future__ import annotations
 
+import functools
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,6 +25,21 @@ def dataset_stats(statements: DataFrame) -> DataFrame:
     return statements.groupBy("dataset", "schema").agg(
         F.countDistinct("canonical_id").alias("entities"),
         F.count(F.lit(1)).alias("statements"),
+    )
+
+
+@functools.cache
+def _stats_tags(gateway) -> F.Column:
+    """:func:`stats`' tag array, built once per JVM gateway (see
+    ``assembly._constants``)."""
+
+    def tag(report: str, key: F.Column) -> F.Column:
+        return F.struct(F.lit(report).alias("report"), key.alias("key"))
+
+    return F.array(
+        tag("entity_count", F.lit(None).cast("string")),
+        tag("schemata", F.col("schema")),
+        F.when(F.col("prop_type") == "country", tag("countries", F.col("value"))),
     )
 
 
@@ -41,15 +58,7 @@ def stats(
         df = df.filter(F.col("dataset") == dataset)
     elif dataset is not None:
         df = df.filter(F.col("dataset").isin(list(dataset)))
-
-    def tag(report: str, key: F.Column) -> F.Column:
-        return F.struct(F.lit(report).alias("report"), key.alias("key"))
-
-    tags = F.array(
-        tag("entity_count", F.lit(None).cast("string")),
-        tag("schemata", F.col("schema")),
-        F.when(F.col("prop_type") == "country", tag("countries", F.col("value"))),
-    )
+    tags = _stats_tags(SparkContext._gateway)
     rows = (
         df.select("canonical_id", F.explode(tags).alias("t"))
         .where(F.col("t").isNotNull())

@@ -63,26 +63,20 @@ def _caption_expr() -> F.Column:
 
 
 @functools.cache
-def _constants(gateway) -> tuple[F.Column, F.Column]:
-    """(:func:`_schema_rank`, :func:`_caption_expr`). Building them takes
-    about 200 py4j calls, and the Columns are JVM objects that any plan
-    may share, so they are built once per JVM gateway."""
-    return _schema_rank(), _caption_expr()
-
-
-def assemble_entities(statements: DataFrame) -> DataFrame:
-    """statements → entity DataFrame (ENTITY_SCHEMA shape)."""
-    schema_rank, caption = _constants(SparkContext._gateway)
-    per_prop = statements.groupBy("canonical_id", "prop").agg(
+def _constants(gateway) -> tuple[list[F.Column], list[F.Column], list[F.Column]]:
+    """Assembly's fixed expressions: the aggregate lists of its two
+    stages and its final select list. Building them takes about 350
+    py4j calls, and the Columns are JVM objects that any plan may share,
+    so they are built once per JVM gateway."""
+    per_prop = [
         F.sort_array(F.collect_set("value")).alias("values"),
         F.collect_set("dataset").alias("ds"),
         F.collect_set("entity_id").alias("eids"),
         F.max(
-            F.struct(schema_rank.alias("d"), F.col("schema").alias("s"))
+            F.struct(_schema_rank().alias("d"), F.col("schema").alias("s"))
         ).alias("schema_rank"),
-    )
-
-    entities = per_prop.groupBy("canonical_id").agg(
+    ]
+    per_entity = [
         F.map_from_entries(
             F.collect_list(
                 F.when(
@@ -98,17 +92,29 @@ def assemble_entities(statements: DataFrame) -> DataFrame:
         F.sort_array(F.array_distinct(F.flatten(F.collect_list("eids")))).alias(
             "all_ids"
         ),
-    )
-
-    return entities.select(
+    ]
+    select = [
         F.col("canonical_id").alias("id"),
-        caption.alias("caption"),
-        "schema",
-        "properties",
-        "datasets",
+        _caption_expr().alias("caption"),
+        F.col("schema"),
+        F.col("properties"),
+        F.col("datasets"),
         F.array_remove("all_ids", F.col("canonical_id").cast("string")).alias(
             "referents"
         ),
+    ]
+    return per_prop, per_entity, select
+
+
+def assemble_entities(statements: DataFrame) -> DataFrame:
+    """statements → entity DataFrame (ENTITY_SCHEMA shape)."""
+    per_prop, per_entity, select = _constants(SparkContext._gateway)
+    return (
+        statements.groupBy("canonical_id", "prop")
+        .agg(*per_prop)
+        .groupBy("canonical_id")
+        .agg(*per_entity)
+        .select(*select)
     )
 
 

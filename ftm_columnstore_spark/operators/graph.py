@@ -9,29 +9,50 @@ one id) is tiny, so we broadcast it and no shuffle of the big table occurs.
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ftm_columnstore_spark.model.ftm import REVERSE_PROPS
 
 
-def _reverse_prop_expr(col: str = "prop") -> F.Column:
+def _reverse_prop_expr() -> F.Column:
     pairs: list[F.Column] = []
     for prop, rev in REVERSE_PROPS.items():
         pairs.append(F.lit(prop))
         pairs.append(F.lit(rev))
     mapping = F.create_map(*pairs)
-    return F.coalesce(mapping[F.col(col)], F.concat(F.col(col), F.lit("Reverse")))
+    return F.coalesce(mapping[F.col("prop")], F.concat(F.col("prop"), F.lit("Reverse")))
+
+
+@functools.cache
+def _constants(gateway) -> tuple[F.Column, list[F.Column]]:
+    """(the ``prop_type = 'entity'`` predicate, :func:`_incoming`'s select
+    list). The reversed-prop map alone takes about 250 py4j calls, so
+    they are built once per JVM gateway (see ``assembly._constants``)."""
+    return F.col("prop_type") == "entity", [
+        _reverse_prop_expr().alias("prop"),
+        F.col("canonical_id").alias("entity_id"),
+    ]
+
+
+def _is_ref() -> F.Column:
+    """Statements whose value references an entity."""
+    return _constants(SparkContext._gateway)[0]
+
+
+def _references(statements: DataFrame, value_id: str) -> DataFrame:
+    """Statements whose value references ``value_id``."""
+    return statements.filter(_is_ref() & (F.col("value") == value_id))
 
 
 def _incoming(statements: DataFrame, value_id: str) -> DataFrame:
     """:func:`inverted` before its distinct: one row per referencing
     statement."""
-    return statements.filter(
-        (F.col("prop_type") == "entity") & (F.col("value") == value_id)
-    ).select(
-        _reverse_prop_expr().alias("prop"),
-        F.col("canonical_id").alias("entity_id"),
+    return _references(statements, value_id).select(
+        *_constants(SparkContext._gateway)[1]
     )
 
 
@@ -48,13 +69,7 @@ def inverted(statements: DataFrame, value_id: str) -> DataFrame:
 def reverse_ids(statements: DataFrame, value_id: str) -> DataFrame:
     """Canonical ids of entities referencing ``value_id`` (F7 reverse
     filter): used as a left-semi join against the statement table."""
-    return (
-        statements.filter(
-            (F.col("prop_type") == "entity") & (F.col("value") == value_id)
-        )
-        .select("canonical_id")
-        .distinct()
-    )
+    return _references(statements, value_id).select("canonical_id").distinct()
 
 
 def expand(
@@ -77,7 +92,7 @@ def expand(
         [(e, 0) for e in entity_ids], "id string, dist int"
     )
     frontier = visited.select("id")
-    edges = statements.filter(F.col("prop_type") == "entity").select(
+    edges = statements.filter(_is_ref()).select(
         "canonical_id", "value"
     )
     for h in range(1, hops + 1):
@@ -113,7 +128,7 @@ def adjacent(statements: DataFrame, entity_id: str) -> DataFrame:
     mine = statements.filter(
         (F.col("canonical_id") == entity_id) | (F.col("entity_id") == entity_id)
     )
-    out_edges = mine.filter(F.col("prop_type") == "entity").select(
+    out_edges = mine.filter(_is_ref()).select(
         F.col("prop"),
         F.col("value").alias("neighbour_id"),
         F.lit("out").alias("direction"),

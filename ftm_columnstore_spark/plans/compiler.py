@@ -31,6 +31,7 @@ import operator
 from dataclasses import replace
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -80,10 +81,18 @@ def _compare(col: F.Column, comparator: str, value: Any) -> F.Column:
     raise ValueError(f"unknown comparator: {comparator}")
 
 
+@functools.lru_cache(maxsize=256)
+def _schema_in(gateway, schema: str) -> F.Column:
+    """ftmq-style hierarchy expansion (F2): Payment ∪ descendants. An
+    ``isin`` over a few dozen literals, built once per JVM gateway and
+    schema (see ``assembly._constants``); the bound only matters for
+    names outside the model."""
+    return F.col("schema").isin(list(schema_descendants(schema)))
+
+
 def _meta_predicate(c: Criterion) -> F.Column:
     if c.field == "schema" and c.comparator == "eq":
-        # ftmq-style hierarchy expansion (F2): Payment ∪ descendants.
-        return F.col("schema").isin(list(schema_descendants(str(c.value))))
+        return _schema_in(SparkContext._gateway, str(c.value))
     return _compare(F.col(c.field), c.comparator, c.value)
 
 
@@ -190,7 +199,14 @@ def _order_direction(q: Query, id_col: str = "canonical_id") -> list[F.Column]:
     definition so null ordering / tie-breaking can never drift apart);
     ``id_col`` is the tiebreak column ('canonical_id' pre-assembly,
     'id' post-assembly)."""
-    if q.ascending:
+    return _order_spec(SparkContext._gateway, q.ascending, id_col)
+
+
+@functools.cache
+def _order_spec(gateway, ascending: bool, id_col: str) -> list[F.Column]:
+    """:func:`_order_direction`, built once per JVM gateway (see
+    ``assembly._constants``)."""
+    if ascending:
         return [
             F.col("__knum").asc_nulls_last(),
             F.col("__kstr").asc_nulls_last(),

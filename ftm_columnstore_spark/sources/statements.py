@@ -16,9 +16,11 @@ data round-trips between the two systems with stable identity.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterable, Mapping
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,14 +28,17 @@ from ftm_columnstore_spark.model.ftm import PROP_TYPES
 from ftm_columnstore_spark.model.schemas import STATEMENT_COLUMNS, STATEMENT_SCHEMA
 
 
-def _prop_type_expr(prop_col: str) -> F.Column:
-    """Columnar prop → prop_type lookup via a broadcast literal map."""
+@functools.cache
+def _prop_type_expr(gateway) -> F.Column:
+    """Columnar prop → prop_type lookup via a broadcast literal map. The
+    map takes about 860 py4j calls, so it is built once per JVM gateway
+    (see ``assembly._constants``)."""
     pairs: list[F.Column] = []
     for prop, ptype in PROP_TYPES.items():
         pairs.append(F.lit(prop))
         pairs.append(F.lit(ptype))
     mapping = F.create_map(*pairs)
-    return F.coalesce(mapping[F.col(prop_col)], F.lit("string"))
+    return F.coalesce(mapping[F.col("prop")], F.lit("string"))
 
 
 def statement_key(
@@ -110,7 +115,7 @@ def entities_to_statements(
         F.col("entity_id").alias("canonical_id"),
         "prop",
         F.when(F.col("prop") == "id", F.lit("id"))
-        .otherwise(_prop_type_expr("prop"))
+        .otherwise(_prop_type_expr(SparkContext._gateway))
         .alias("prop_type"),
         "schema",
         "value",

@@ -14,6 +14,14 @@ Replaces the reference's ClickHouse ``ReplacingMergeTree`` table
 - **compaction** (``optimize()``): the ``OPTIMIZE TABLE … FINAL DEDUPLICATE``
   analogue (engine.py:114-125) — rewrites the store with the same window so
   subsequent reads skip the dedup shuffle.
+- **a small-store copy**: a compacted store (or value index) of at most
+  ``SMALL_STORE_BYTES`` is read once per compaction into one in-memory
+  partition (an eager local checkpoint), keyed on its marker's payload
+  (write epoch, bytes, nonce). Reads are served from it until the marker
+  changes, so a serving call neither lists nor opens parquet files and
+  plans no shuffle — the analogue of the reference's one warm table. The
+  Store releases a replaced copy itself and reads a copy whose block was
+  lost again from parquet (see ``Store._small_copy``).
 
 At 100TB: appends are embarrassingly parallel; the dedup window shuffles on
 ``canonical_id`` which is also the write-sort key, and AQE handles skewed
@@ -26,6 +34,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
+import uuid
 from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -116,17 +126,31 @@ def _data_bytes(inv: dict[str, int]) -> int:
     )
 
 
-def _one_partition_if_small(df: DataFrame, marker: dict) -> DataFrame:
-    """The small-store rule (see :meth:`Store.statements`): ``df`` as ONE
-    partition when ``marker`` records at most ``SMALL_STORE_BYTES`` of
-    data. A serving call then pays one stage, not one per shuffle, for
-    work measured in milliseconds. ``coalesce`` is a narrow dependency,
-    so filters still push into the scan. A marker without a byte count
-    means size unknown: no change."""
-    size = marker.get("bytes")
-    if isinstance(size, int) and size <= SMALL_STORE_BYTES:
-        return df.coalesce(1)
-    return df
+class _Copy:
+    """The small-store rule's copy of one parquet directory: its rows in
+    ONE in-memory partition, read by one eager local checkpoint.
+
+    A local checkpoint keeps the single partition in the plan (the
+    aggregates above need no Exchange) and, unlike ``persist()``, never
+    enters Spark's CacheManager, so no query pays its plan look-ups.
+    ``key`` is the marker payload the copy was read under."""
+
+    def __init__(self, scan: DataFrame, key: dict):
+        self.key = key
+        self.df = scan.coalesce(1).localCheckpoint(eager=True)
+        self._rdd = self.df._jdf.queryExecution().analyzed().rdd()
+        self._block = scan.sparkSession._jvm.org.apache.spark.storage.RDDBlockId(
+            self._rdd.id(), 0
+        )
+        self._master = scan.sparkSession._jsc.sc().env().blockManager().master()
+
+    def live(self) -> bool:
+        """Whether the copy's one block is still stored: an unpersist or
+        a lost executor removes it, and reading the copy then fails."""
+        return self._master.contains(self._block)
+
+    def release(self) -> None:
+        self._rdd.unpersist(False)
 
 
 def _scoped(df: DataFrame, dataset: str | list[str] | None) -> DataFrame:
@@ -153,6 +177,11 @@ class Store:
         self._index_marker = os.path.join(self._index_path, "_built")
         self._canonical: DataFrame | None = None
         self._bucketed: str | None = None
+        # the small-store rule's copies, by parquet directory (see
+        # _small_copy); built under the lock, as View calls may come
+        # from several threads
+        self._copies: dict[str, _Copy] = {}
+        self._copy_lock = threading.Lock()
 
     # --- compaction marker / write epoch --------------------------------------
     # After optimize() the on-disk rows are unique on STATEMENT_KEY, so
@@ -201,12 +230,16 @@ class Store:
         # when the store holds millions of files; only the deep
         # verify_compacted() reads the (store-sized) inventory. The
         # marker carries the data bytes for the small-store rule (see
-        # statements()), so reads never walk the store to size it.
+        # statements()), so reads never walk the store to size it, and a
+        # nonce, so a store re-created at the same path never matches
+        # the key of a copy read from the old one.
         inv = _inventory(self._path)
         _write_json(self._inventory_file, inv)
-        _write_json(
-            self._marker, {"epoch": self._read_epoch(), "bytes": _data_bytes(inv)}
-        )
+        _write_json(self._marker, {
+            "epoch": self._read_epoch(),
+            "bytes": _data_bytes(inv),
+            "nonce": uuid.uuid4().hex,
+        })
 
     def _clear_compacted(self) -> None:
         if os.path.exists(self._marker):
@@ -253,6 +286,7 @@ class Store:
         shutil.rmtree(self._path, ignore_errors=True)
         self.bump_epoch()
         self._clear_compacted()
+        self._small_copy(self._path, None)
 
     def exists(self) -> bool:
         return os.path.exists(self._path)
@@ -325,6 +359,48 @@ class Store:
         return self.spark.read.schema(FPX_SCHEMA).parquet(path).distinct()
 
     # --- read path (S6, F1) ---------------------------------------------------
+    def _scan(self, path: str) -> DataFrame:
+        return self.spark.read.schema(STATEMENT_SCHEMA).parquet(path)
+
+    def _small_copy(self, path: str, marker: dict | None) -> DataFrame | None:
+        """The small-store rule: the in-memory copy of the parquet data at
+        ``path`` when ``marker`` (a current marker payload, or None)
+        records at most ``SMALL_STORE_BYTES`` of data, else None.
+
+        Key: the copy is read once and served while ``marker`` equals the
+        payload it was read under. Every marker carries the write epoch
+        and a nonce drawn when it was written, so a write, a compaction,
+        a value-index rebuild or a store re-created at the same path all
+        change the key. A marker without a byte count means size unknown:
+        no copy.
+
+        Release: a copy whose key no longer matches (or when the rule no
+        longer applies) is unpersisted here, at the next read, and by
+        :meth:`drop`; never left to garbage collection. A DataFrame built
+        over a copy must run its action before that.
+
+        Lost blocks: a copy whose block is gone (unpersisted from outside,
+        or lost with its executor) is read again from parquet, never
+        served: reading it would fail. One block look-up per read checks
+        this.
+
+        One copy per directory per Store, built under a lock: concurrent
+        first reads build it once."""
+        size = marker.get("bytes") if marker is not None else None
+        small = isinstance(size, int) and size <= SMALL_STORE_BYTES
+        with self._copy_lock:
+            held = self._copies.pop(path, None)
+            if held is not None:
+                if small and held.key == marker and held.live():
+                    self._copies[path] = held
+                    return held.df
+                held.release()
+            if not small:
+                return None
+            copy = _Copy(self._scan(path), marker)
+            self._copies[path] = copy
+            return copy.df
+
     def statements(
         self,
         dataset: str | list[str] | None = None,
@@ -359,26 +435,32 @@ class Store:
         store's single-writer design.
 
         Small-store rule: a compacted store whose data is at most
-        ``SMALL_STORE_BYTES`` (1 MB, about 30k statements) is read as
-        a single partition (``coalesce(1)``), so every canonical_id-keyed
-        aggregate above it — the frontier, entity assembly, dedup under a
-        resolver, grouped aggregations, ``stats()`` — plans with no hash
-        or range Exchange. The rule holds for every reader, bulk ones
-        (export, xref, CLI stats) included: the limit is where a full
-        assembly in one task stops beating the shuffled plan. The
-        resolver's own join still shuffles when its map has no size
-        estimate to broadcast by (one built from Python rows); a map read
-        from parquet is broadcast. Uncompacted stores (many small
+        ``SMALL_STORE_BYTES`` (1 MB, about 30k statements) is read once
+        per compaction into an in-memory copy of ONE partition, and reads
+        are served from that copy until the compaction marker changes
+        (see :meth:`_small_copy` for its key, release and lost blocks).
+        So a read neither lists nor opens parquet files, and every
+        canonical_id-keyed aggregate above it — the frontier, entity
+        assembly, dedup under a resolver, grouped aggregations,
+        ``stats()`` — plans with no hash or range Exchange. ``dataset``,
+        ``as_of`` and the resolver apply to the copy as they apply to the
+        scan (a filter over the copy's rows, not partition pruning). The
+        rule holds for every reader, bulk ones (export, xref, CLI stats)
+        included: the limit is where a full assembly in one task stops
+        beating the shuffled plan. The resolver's own join still shuffles
+        when its map has no size estimate to broadcast by (one built from
+        Python rows); its output is coalesced back to one partition. A map
+        read from parquet is broadcast. Uncompacted stores (many small
         appended files), larger ones, stores compacted before the byte
-        count was recorded and the bucketed snapshot keep their
-        partitioning.
+        count was recorded and the bucketed snapshot keep their parquet
+        scan and its partitioning.
 
         With :meth:`use_bucketed` enabled, reads serve from the
         bucketed snapshot table instead of the parquet store — same
         columns, same filters, zero-Exchange plans for every
         canonical_id-keyed consumer; see that method for the staleness
         contract."""
-        marker = None
+        copy = None
         if self._bucketed is not None:
             # snapshot was written from statements() (already deduped);
             # treated like a compacted store: fast path unless a
@@ -388,19 +470,20 @@ class Store:
         else:
             if not self.exists():
                 return self.spark.createDataFrame([], STATEMENT_SCHEMA)
-            df = self.spark.read.schema(STATEMENT_SCHEMA).parquet(self._path)
             marker = self._current(self._marker)
             already_clean = marker is not None
+            copy = self._small_copy(self._path, marker)
+            df = copy if copy is not None else self._scan(self._path)
         df = _scoped(df, dataset)
         if as_of is not None:
             df = df.filter(
                 F.col("last_seen") <= F.to_timestamp(F.lit(as_of))
             )
         df = self._apply_canonical(df)
-        if marker is not None:
-            # above the resolver's join: a shuffled join keeps its own
-            # exchange, and the aggregates above still need none
-            df = _one_partition_if_small(df, marker)
+        if copy is not None and self._canonical is not None:
+            # a shuffled resolver join repartitions the copy's rows:
+            # one partition again, so the dedup above needs no exchange
+            df = df.coalesce(1)
         if deduped and self._canonical is None and already_clean:
             # compacted store, no resolver: rows already unique on
             # STATEMENT_KEY — skip the corpus-wide dedup shuffle (the
@@ -524,7 +607,11 @@ class Store:
         )
         _write_json(
             os.path.join(tmp, os.path.basename(self._index_marker)),
-            {"epoch": epoch, "bytes": _data_bytes(_inventory(tmp))},
+            {
+                "epoch": epoch,
+                "bytes": _data_bytes(_inventory(tmp)),
+                "nonce": uuid.uuid4().hex,
+            },
         )
         # same rename-aside discipline as _promote (derived artifact, so
         # a crash here is harmless either way — readers fall back to the
@@ -549,12 +636,17 @@ class Store:
         that was current when it started over to the new epoch. An index
         without a marker (built before markers were written) is never
         current. The small-store rule of :meth:`statements` applies to
-        the index by its own recorded size."""
+        the index by its own marker: an index of at most
+        ``SMALL_STORE_BYTES`` is served from an in-memory copy of one
+        partition, read once per build and keyed on the index marker (so
+        a rebuild, or the re-stamp :meth:`optimize` gives it, reads a new
+        copy and releases the old one); see :meth:`_small_copy`."""
         marker = self._current(self._index_marker)
+        # asked with a stale marker too: that releases a held copy
+        copy = self._small_copy(self._index_path, marker)
         if marker is None:
             return None
-        idx = self.spark.read.schema(STATEMENT_SCHEMA).parquet(self._index_path)
-        return _one_partition_if_small(idx, marker)
+        return copy if copy is not None else self._scan(self._index_path)
 
     def entity_refs(self, dataset: str | list[str] | None = None) -> DataFrame:
         """Entity-reference statements (``prop_type='entity'``) of
@@ -689,11 +781,7 @@ class Store:
             )
             if any(d is None for d in group):
                 pred = pred | F.col("dataset").isNull()
-            src = (
-                self.spark.read.schema(STATEMENT_SCHEMA)
-                .parquet(self._path)
-                .filter(pred)
-            )
+            src = self._scan(self._path).filter(pred)
             if keep is not None:
                 src = src.filter(keep)
             for i in range(slices):
@@ -795,8 +883,7 @@ class Store:
             # partition values via the scan (handles hive-escaped names)
             datasets = [
                 r["dataset"]
-                for r in self.spark.read.schema(STATEMENT_SCHEMA)
-                .parquet(self._path)
+                for r in self._scan(self._path)
                 .select("dataset")
                 .distinct()
                 .collect()

@@ -312,9 +312,12 @@ def test_changed_entities_delta(store, entities_df, spark):
     assert rows[0]["properties"]["alias"] == ["ACME"]
 
 
-def test_value_index_parity_and_pruning(store, entities_df, spark):
+def test_value_index_parity_and_pruning(
+    store, entities_df, spark, small_store_rule_off
+):
     """The value-clustered reverse-lookup copy returns the same edges as
-    the main-table scan, prunes with a pushed value filter, and readers
+    the main-table scan, prunes with a pushed value filter (read from
+    parquet, as an index above the small-store limit is), and readers
     fall back gracefully when it is absent."""
     from ftm_columnstore_spark.operators.graph import inverted
 
@@ -340,17 +343,20 @@ def test_value_index_parity_and_pruning(store, entities_df, spark):
         (r["prop"], r["entity_id"]) for r in inverted(idx, ref_id).collect()
     )
     assert via_index == base
+
+    # the index is the entity_refs() source once built
+    assert store.entity_refs().count() == idx.count()
+
     # point lookup pushes the value predicate into the parquet scan
+    small_store_rule_off()
     plan = (
-        idx.filter(F.col("value") == ref_id)
+        store.value_index()
+        .filter(F.col("value") == ref_id)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "PushedFilters" in plan and "value" in plan
-
-    # the index is the entity_refs() source once built
-    assert store.entity_refs().count() == idx.count()
 
 
 def test_view_inverted_uses_index(store, entities_df):
@@ -411,9 +417,9 @@ def test_optimize_keeps_a_current_value_index(store, entities_df):
 
 
 def test_small_store_rule_needs_a_recorded_size(store, entities_df):
-    """A compacted store reads as one partition only when its marker
-    records a size within the limit; a marker written before sizes were
-    recorded keeps the partitioned plan."""
+    """A compacted store is served from its in-memory copy only when its
+    marker records a size within the limit; a marker written before sizes
+    were recorded keeps the parquet scan."""
     import json
 
     store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
@@ -425,12 +431,172 @@ def test_small_store_rule_needs_a_recorded_size(store, entities_df):
     with open(store._marker) as fh:
         marker = json.load(fh)
     assert 0 < marker["bytes"] <= SMALL_STORE_BYTES
-    assert "Coalesce 1" in plan()
+    assert "Scan ExistingRDD" in plan() and "FileScan" not in plan()
     del marker["bytes"]
     with open(store._marker, "w") as fh:
         json.dump(marker, fh)
     assert store.is_compacted()
-    assert "Coalesce 1" not in plan()
+    assert "FileScan parquet" in plan() and "ExistingRDD" not in plan()
+
+
+# --- the small-store copy's lifetime -----------------------------------------
+def _persistent(spark) -> set[int]:
+    return set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+
+
+def _copy_rdd(store, path=None) -> int:
+    """The RDD id of the copy ``store`` holds for ``path`` (the
+    statements directory by default)."""
+    return store._copies[path or store._path]._rdd.id()
+
+
+def _ids(store, **kw) -> set[str]:
+    return {r["entity_id"] for r in store.statements(**kw).select("entity_id").collect()}
+
+
+def test_small_copy_sees_a_write(store, spark, entities_df):
+    """A write after the copy exists is visible to the next read, and the
+    first read after it releases the copy (a cache keyed on the path
+    alone would serve the old rows)."""
+    from ftm_columnstore_spark.sources.statements import statements_from_rows
+
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    store.optimize()
+    assert "pay-9" not in _ids(store)
+    old = _copy_rdd(store)
+    assert old in _persistent(spark)
+    store.write_statements(statements_from_rows(spark, [dict(
+        id="w-1", entity_id="pay-9", prop="amountEur", schema="Payment",
+        value="5", dataset="grants", last_seen=None)]))
+    assert "pay-9" in _ids(store)
+    assert old not in _persistent(spark) and not store._copies
+    store.optimize()
+    assert "pay-9" in _ids(store)
+
+
+def test_optimize_replaces_the_copy(store, spark, entities_df):
+    """A compaction gives the next read a new copy, and the replaced one
+    is released: one persistent RDD per path."""
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    store.optimize()
+    n = store.statements().count()
+    old = _copy_rdd(store)
+    assert store.statements().count() == n
+    assert _copy_rdd(store) == old  # served, not read again
+    store.write_entities(entities_df, last_seen="2024-02-01 00:00:00")
+    store.optimize()
+    assert store.statements().count() == n
+    new = _copy_rdd(store)
+    assert new != old
+    assert new in _persistent(spark) and old not in _persistent(spark)
+
+
+def test_pop_and_drop_release_the_copy(store, spark, entities_df):
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    store.optimize()
+    assert "pay-1" in _ids(store)
+    first = _copy_rdd(store)
+    assert [r["entity_id"] for r in store.pop("pay-1")] and store.is_compacted()
+    assert "pay-1" not in _ids(store)
+    second = _copy_rdd(store)
+    assert second != first and first not in _persistent(spark)
+    store.drop()
+    assert not store._copies and second not in _persistent(spark)
+    assert store.statements().count() == 0
+
+
+def test_recreated_store_gets_a_new_copy(store, spark, entities_df):
+    """A store deleted and re-created at the same path reaches the same
+    epoch with the same byte count; the marker's nonce still tells the
+    two apart."""
+    import json
+    import shutil
+
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    store.optimize()
+    with open(store._marker) as fh:
+        before = json.load(fh)
+    assert _ids(store, as_of="2024-01-15")
+    shutil.rmtree(store.uri)
+    store.write_entities(entities_df, last_seen="2024-02-01 00:00:00")
+    store.optimize()
+    with open(store._marker) as fh:
+        after = json.load(fh)
+    assert (after["epoch"], after["bytes"]) == (before["epoch"], before["bytes"])
+    assert not _ids(store, as_of="2024-01-15")
+
+
+def test_rebuilt_value_index_gets_a_new_copy(store, spark, entities_df):
+    from ftm_columnstore_spark.sources.statements import statements_from_rows
+
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    store.optimize()
+    store.build_value_index()
+    v = store.view()
+    assert sorted(v.get_inverted("org-beta")) == [
+        ("paymentsMade", "pay-1"), ("paymentsReceived", "pay-3")]
+    old = _copy_rdd(store, store._index_path)
+    store.write_statements(statements_from_rows(spark, [dict(
+        id="w-1", entity_id="pay-9", prop="payer", prop_type="entity",
+        schema="Payment", value="org-beta", dataset="grants", last_seen=None)]))
+    store.build_value_index()
+    assert sorted(v.get_inverted("org-beta")) == [
+        ("paymentsMade", "pay-1"), ("paymentsMade", "pay-9"),
+        ("paymentsReceived", "pay-3")]
+    new = _copy_rdd(store, store._index_path)
+    assert new != old and old not in _persistent(spark)
+
+
+@pytest.mark.parametrize("loss", ["unpersist", "block"])
+def test_lost_copy_blocks_are_read_again(store, spark, entities_df, loss):
+    """A copy whose block is gone is read again from parquet: serving it
+    would fail with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. ``block`` removes
+    the block alone and leaves the RDD registered, as losing the
+    executor that holds it does."""
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    store.optimize()
+    n = store.statements().count()
+    held = store._copies[store._path]
+    if loss == "unpersist":
+        held._rdd.unpersist(True)
+    else:
+        spark.sparkContext._jsc.sc().env().blockManager().removeBlock(
+            held._block, True)
+    assert not held.live()
+    assert store.statements().count() == n
+    assert _copy_rdd(store) != held._rdd.id()
+    assert held._rdd.id() not in _persistent(spark)
+
+
+def test_concurrent_first_reads_build_one_copy(store, entities_df, monkeypatch):
+    import threading
+
+    import ftm_columnstore_spark.store as store_mod
+
+    store.write_entities(entities_df, last_seen="2024-01-01 00:00:00")
+    store.optimize()
+    built = []
+
+    class Counted(store_mod._Copy):
+        def __init__(self, *args):
+            built.append(self)
+            super().__init__(*args)
+
+    monkeypatch.setattr(store_mod, "_Copy", Counted)
+    start = threading.Barrier(2)
+    counts = []
+
+    def read():
+        start.wait()
+        counts.append(store.statements().count())
+
+    threads = [threading.Thread(target=read) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(counts) == 2 and counts[0] == counts[1] > 0
+    assert len(built) == 1
 
 
 def test_resolved_view_inverted_unchanged_by_value_index(store, spark, entities_df):

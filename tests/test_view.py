@@ -161,10 +161,11 @@ def _plan(df) -> str:
 def test_single_partition_view_plans_shuffle_nothing(
     compacted, small_store_rule_off
 ):
-    """On a small compacted store the View's canonical_id aggregates
-    need no hash or range Exchange (broadcasts remain); the dataset and
-    canonical_id filters still reach the scan. With the rule off the
-    same plans shuffle."""
+    """On a small compacted store the View reads the in-memory copy, not
+    parquet, and its canonical_id aggregates need no hash or range
+    Exchange (broadcasts remain). With the rule off the same plans scan
+    parquet, the dataset and canonical_id filters reach the scan, and
+    the plans shuffle."""
     from ftm_columnstore_spark.operators.assembly import get_entity
     from ftm_columnstore_spark.operators.graph import adjacent, inverted
     from ftm_columnstore_spark.plans.compiler import (
@@ -187,16 +188,49 @@ def test_single_partition_view_plans_shuffle_nothing(
             "inverted": _plan(inverted(store.entity_refs(), "org-acme")),
         }
 
-    for name, plan in plans(compacted).items():
-        assert "Coalesce 1" in plan, name
+    def point(store) -> str:
+        return _plan(
+            store.statements(dataset="grants").filter("canonical_id = 'org-acme'")
+        )
+
+    for name, plan in {**plans(compacted), "point": point(compacted)}.items():
+        assert "Scan ExistingRDD" in plan, name
+        assert "FileScan" not in plan, name
         assert "Exchange hashpartitioning" not in plan, name
         assert "rangepartitioning" not in plan, name
-    point = _plan(
-        compacted.statements(dataset="grants").filter("canonical_id = 'org-acme'")
-    )
-    assert "dataset" in point.split("PartitionFilters", 1)[1][:200]
-    assert "canonical_id" in point.split("PushedFilters", 1)[1][:200]
     small_store_rule_off()
     off = plans(compacted)
-    assert not any("Coalesce 1" in plan for plan in off.values())
+    assert not any("ExistingRDD" in plan for plan in off.values())
     assert "Exchange hashpartitioning" in off["by_country"]
+    scan = point(compacted)
+    assert "dataset" in scan.split("PartitionFilters", 1)[1][:200]
+    assert "canonical_id" in scan.split("PushedFilters", 1)[1][:200]
+
+
+def test_view_mix_leaves_cache_manager_empty(compacted, cache_empty):
+    """The small-store copies are local checkpoints: they never enter
+    Spark's CacheManager, so no query pays its plan look-ups."""
+    _serve_mix(compacted.view())
+    assert set(compacted._copies) == {compacted._path, compacted._index_path}
+    assert cache_empty()
+
+
+def test_warm_get_entity_round_trips(compacted, monkeypatch):
+    """A warm ``get_entity`` call builds its fixed expressions once per
+    JVM gateway: about 120 Py4J round trips, against about 480 when every
+    call rebuilt assembly's aggregate and select lists."""
+    from py4j.clientserver import ClientServerConnection
+
+    view = compacted.view()
+    view.get_entity("org-acme")
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    assert view.get_entity("org-acme")["id"] == "org-acme"
+    monkeypatch.undo()
+    assert len(sent) <= 200
