@@ -1152,10 +1152,7 @@ def v5_ivf_trained_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises multi-iteration convergence and the small-centroid/low-
     probe regime through the same exact-arithmetic machinery, so the
     v11 unrolled-CTE oracle applies verbatim with these params.
-    (Replaces the permanently rows-only float-k-means entry: float
-    Lloyd training is inherently non-SQL, and its serve path is
-    pytest-covered via test_similarity + the v10 recall harness —
-    VERDICT r3 item 1b.)"""
+    Integer Lloyd keeps training exact, so the oracle can replay it."""
     from ftm_columnstore_spark.operators.similarity import (
         ivf_topk_portable,
         kmeans_centroids_portable,
@@ -1546,10 +1543,7 @@ def v13_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing to 4 of 16 cells, PQ-ADC ranking over the probed rows'
     8-int codes, exact integer-L2 refine of the top-50. One codegen
     scan (route + encode + ADC are all literal expressions) into a
-    top-k — zero shuffles; the materialized twin
-    (build_ivfpq_index/ivfpq_topk_indexed) turns the cell filter into
-    parquet partition pruning and is plan-asserted equal in
-    tests/test_similarity.py. Fully oracle-checked end-to-end."""
+    top-k — zero shuffles. Fully oracle-checked end-to-end."""
     from ftm_columnstore_spark.operators.similarity import ivfpq_topk_portable
 
     e = _t(spark, sf_dir, "embeddings")

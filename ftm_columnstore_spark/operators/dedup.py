@@ -5,16 +5,15 @@ extension; grades alongside SURVEY §2). Four families:
 - **MinHash + LSH**: shingle → minhash signature → band-bucket join —
   near-dup candidates without the O(n²) cross join; the only shuffles are
   on (band, bucket-hash) keys;
-- **SimHash**: 64-bit weighted token hash; near-dups share bands of bits;
+- **SimHash**: 64-bit token-vote hash from an md5 token hash; near-dups
+  share bands of bits;
 - **n-gram Jaccard**: exact Jaccard on shingle sets for candidate pairs
   (inverted-index self-join, prefix-filtered).
 
-Hot paths are codegen'd column expressions OR Arrow-batched vectorized
-passes — never interpreted per-row work: Spark runs HOF lambdas on the
-interpreted path, so token-granular derives (shingling, simhash votes)
-use mapInPandas + numpy (see NOTES.md "Hot-path rule, measured
-exception"), while joins/aggregates stay JVM-side. At 100 TB the pattern
-per family is scan → narrow derive → one keyed shuffle → grouped reduce.
+Hot paths are codegen'd column expressions and JVM-side joins and
+aggregates, with every value reproducible in plain SQL (the DuckDB
+oracle). At 100 TB the pattern per family is scan → narrow derive → one
+keyed shuffle → grouped reduce.
 
 Background (public literature): banded MinHash-LSH per Broder'97 /
 Leskovec-Rajaraman-Ullman (MMDS ch.3); SimHash per Charikar'02 as used in
@@ -330,8 +329,8 @@ def cross_pairs_from_banded(
 ) -> DataFrame:
     """Pair stage of :func:`minhash_lsh_pairs_cross` over PRE-BANDED
     relations (from :func:`_band_relation`) — the entry point for callers
-    that band the corpus once and reuse it (persisted dedup index,
-    per-micro-batch streaming dedup).
+    that band the corpus once and reuse it (the near-dup stage of
+    ``streaming/clean.py``, once per micro-batch).
 
     Same narrow-pairing shape as :func:`minhash_lsh_pairs`: ids-only
     band join and distinct, signatures joined back afterwards."""
@@ -460,67 +459,6 @@ def minhash_dedup(
 
 # --- SimHash ------------------------------------------------------------------
 
-def simhash_docs(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, sh) — 64-bit SimHash per document via Arrow-batched numpy:
-    a Spark-expression form walks tokens×64 bits through interpreted HOF
-    lambdas (~4.3s for 5k sf0.1 docs); here the whole batch is
-    vectorized — ONE `pd.util.hash_array` call hashes every
-    token of every doc (C-speed, deterministic fixed-key siphash,
-    PYTHONHASHSEED-independent), one broadcast builds the bit matrix,
-    and `np.add.reduceat` folds per-doc votes without a Python-level
-    doc loop. Any good 64-bit token hash yields the same near-dup
-    geometry, which is the operator's contract."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    import re as _re
-
-    from ftm_columnstore_spark.functions.text import NON_ALNUM, fan_out
-
-    df = fan_out(df)
-    pat = _re.compile(NON_ALNUM)
-    out_schema = T.StructType(
-        [
-            T.StructField("id", df.schema[id_col].dataType),
-            T.StructField("sh", T.LongType()),
-        ]
-    )
-    shifts = np.arange(64, dtype=np.uint64)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, tok_lists = [], []
-            for doc_id, txt in zip(pdf["id"], pdf["__text"]):
-                if not isinstance(txt, str):
-                    continue
-                toks = [t for t in pat.split(txt.lower()) if t]
-                if toks:
-                    ids.append(doc_id)
-                    tok_lists.append(toks)
-            if not ids:
-                continue
-            lens = np.array([len(t) for t in tok_lists])
-            flat = np.concatenate([np.array(t, dtype=object) for t in tok_lists])
-            hs = pd.util.hash_array(flat)  # ΣT uint64, one C call
-            bits = ((hs[:, None] >> shifts) & np.uint64(1)).astype(np.int64)
-            offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            votes = 2 * np.add.reduceat(bits, offsets, axis=0) - lens[:, None]
-            sh = ((votes > 0).astype(np.uint64) << shifts).sum(
-                axis=1, dtype=np.uint64
-            )
-            yield pd.DataFrame(
-                {"id": ids, "sh": sh.view(np.int64)}  # two's-complement reinterpret
-            )
-
-    narrow = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-    return narrow.mapInPandas(gen, schema=out_schema)
-
-
 def _check_simhash_params(bands: int, max_hamming: int | None = None) -> None:
     """Guard the pigeonhole contract: the 64 bits must split evenly into
     ``bands`` chunks (otherwise high bits silently drop out of the
@@ -538,79 +476,6 @@ def _check_simhash_params(bands: int, max_hamming: int | None = None) -> None:
         )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: band the 64 bits into ``bands`` chunks —
-    any pair within ``max_hamming`` (< bands) shares ≥1 exact chunk
-    (pigeonhole). Pairs are generated INSIDE each (band, chunk) bucket
-    (groupBy + sorted collect_list + positional pair expansion) rather
-    than by a banded self-join: the self-join form computes the simhash
-    lineage twice (no exchange reuse across the join's two sides —
-    measured 3.4s vs 1.2s at sf0.1) and shuffles 2× the rows. One hash
-    pass, one shuffle on (band, chunk), one distinct on the pair key.
-    ``max_bucket`` skips degenerate hot buckets (boilerplate/identical
-    docs — run `dedup_exact` first, see NOTES.md pipeline order): a
-    bucket of m docs emits m² pairs, so an uncapped 10⁶-doc bucket would
-    be quadratic; capped buckets are dropped whole (no partial sample),
-    keeping the output deterministic."""
-    _check_simhash_params(bands, max_hamming)
-    hashed = simhash_docs(df, text_col, id_col)
-    width = 64 // bands
-    banded = hashed.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned("sh", b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bc"),
-    ).select("bc.band", "bc.chunk", "id", "sh")
-    max_bucket = 1024
-    buckets = (
-        banded.groupBy("band", "chunk")
-        .agg(F.array_sort(F.collect_list(F.struct("id", "sh"))).alias("ms"))
-        .filter((F.size("ms") > 1) & (F.size("ms") <= max_bucket))
-    )
-    # positional expansion keeps left_id < right_id for free: ms is
-    # sorted by id, and each element pairs only with its successors
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("ms"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                    lambda y: F.struct(
-                        x.getField("id").alias("left_id"),
-                        y.getField("id").alias("right_id"),
-                        F.bit_count(
-                            x.getField("sh").bitwiseXOR(y.getField("sh"))
-                        ).alias("hamming"),
-                    ),
-                ),
-            )
-        )
-    )
-    return (
-        buckets.select(pair.alias("p"))
-        .select("p.left_id", "p.right_id", "p.hamming")
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["left_id", "right_id"])
-    )
-
-
 def simhash_chunks(
     df: DataFrame,
     text_col: str = "text",
@@ -621,8 +486,7 @@ def simhash_chunks(
     unsigned chunks, computed with the engine-portable md5 token hash
     (two 32-bit halves of the md5 hex prefix), so the whole derivation is
     exact integer arithmetic reproducible in any SQL engine (oracle
-    parity — the pd.util.hash_array fast path in :func:`simhash_docs`
-    is Spark-only).
+    parity).
 
     Relational two-aggregation shape: token rows → groupBy(id, token)
     occurrence counts (collapses repeated tokens BEFORE the expensive
@@ -701,12 +565,14 @@ def simhash_pairs_portable(
     bands: int = 4,
     max_bucket: int = 1024,
 ) -> DataFrame:
-    """Near-dup pairs from the portable SimHash (:func:`simhash_chunks`).
-    Same pigeonhole banding contract as :func:`simhash_pairs` (any pair
-    within ``max_hamming`` < ``bands`` shares an exact chunk; oversized
-    buckets dropped whole, deterministically), but every value is
-    reproducible outside Spark — this is the oracle-checked variant; the
-    numpy/siphash one stays as the single-engine throughput path."""
+    """Near-dup pairs by SimHash (:func:`simhash_chunks`): band the 64
+    bits into ``bands`` chunks — any pair within ``max_hamming``
+    (< ``bands``) shares ≥1 exact chunk (pigeonhole). ``max_bucket``
+    skips degenerate hot buckets (boilerplate/identical docs — run
+    `dedup_exact` first, see NOTES.md pipeline order): a bucket of m docs
+    emits m² pairs, so oversized buckets are dropped whole (no partial
+    sample), keeping the output deterministic. Every value is
+    reproducible outside Spark; oracle-checked as d4."""
     _check_simhash_params(bands, max_hamming)
     # persist + eager materialize — the bucket-size agg and both join
     # sides consume it; lazy persist lets those stages race to compute
@@ -1180,9 +1046,8 @@ def semantic_dedup_portable(
 
     Portability/scale: clustering uses FIXED lowest-id centroids and the
     exact integer-arithmetic assignment shared with
-    :func:`~ftm_columnstore_spark.operators.similarity.ivf_topk_portable`
-    (trained path: ``kmeans_centroids``/``build_ivf_index``). The
-    pairwise stage self-joins ON THE CLUSTER ID, so cost is
+    :func:`~ftm_columnstore_spark.operators.similarity.ivf_topk_portable`.
+    The pairwise stage self-joins ON THE CLUSTER ID, so cost is
     sum(|cluster|²) — tuned by ``n_centroids``; the ``None`` default
     auto-sizes ``ceil(N/4096)`` centroids from one count job
     (:func:`~ftm_columnstore_spark.operators.similarity.

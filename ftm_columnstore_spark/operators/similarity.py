@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (north-star extension).
 
-Two tiers:
+One implementation per algorithm:
 
 - **brute_force_topk** — exact cosine top-k: broadcast the query vector(s),
   one scan, ``TakeOrderedAndProject`` top-k. The correctness baseline and
@@ -10,12 +10,17 @@ Two tiers:
   (multi-probe), then an exact cosine re-rank on the candidate set. The
   100 TB path: the scan prunes to matching buckets (partition the corpus
   by signature prefix on write to turn this into partition pruning).
+- **ivf_topk_portable** — IVF over the same quantized ints: fixed
+  lowest-id centroids, or trained ones from
+  :func:`kmeans_centroids_portable`; probe the query's nearest cells,
+  exact re-rank inside them.
+- **pq_topk / ivfpq_topk_portable / pq_knn_join** — product-quantized
+  ADC ranking, alone or behind the IVF coarse quantizer, with an
+  optional exact refine.
 
 Planes are deterministic ±1 vectors (``dedup._plane_signs``) and every
 dot product is exact int64 arithmetic, so the candidate set, the scores
-and the k-cut are identical on every executor and in the DuckDB oracle;
-for production-quality recall swap in trained IVF centroids, same plan
-shape.
+and the k-cut are identical on every executor and in the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -201,10 +206,10 @@ def lsh_topk_portable(
     return _rerank_topk(cand, qq, qnorm, id_col, k)
 
 
-def auto_n_centroids_ivf(n_rows: int, cap: int = 4096) -> int:
+def auto_n_centroids_ivf(n_rows: int) -> int:
     """Default IVF coarse-quantizer sizing: ``sqrt(N)`` clamped to
-    [16, cap] (the FAISS guideline is ~4·sqrt(N)–16·sqrt(N) lists;
-    plain sqrt(N) here because probe cost is a partition-pruned scan of
+    [16, 4096] (the FAISS guideline is ~4·sqrt(N)–16·sqrt(N) lists;
+    plain sqrt(N) here because the exact re-rank covers
     ``n_probe/n_centroids`` of the corpus either way, while the
     centroid relation must stay driver-collect/broadcast-bounded).
     With a fixed default of 16 the per-list size — and with it probe
@@ -212,7 +217,7 @@ def auto_n_centroids_ivf(n_rows: int, cap: int = 4096) -> int:
     list size and the centroid scan at O(sqrt(N))."""
     if n_rows < 0:
         raise ValueError(f"n_rows must be >= 0, got {n_rows}")
-    return max(16, min(cap, int(round(n_rows**0.5))))
+    return max(16, min(4096, int(round(n_rows**0.5))))
 
 
 def auto_n_centroids_pairs(
@@ -237,8 +242,7 @@ def assign_fixed_centroids(q: DataFrame, cents, id_type) -> DataFrame:
 
     ``q`` is (id, q array<long>); ``cents`` is a driver-side list of
     (cid, [int components]) — bounded by the centroid count, broadcast.
-    O(N·D·C) correctness-first form; trained/partition-pruned scale path
-    is :func:`build_ivf_index`."""
+    O(N·D·C) correctness-first form."""
     from pyspark.sql import Window
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
@@ -300,14 +304,10 @@ def ivf_topk_portable(
     arithmetic, hence oracle-checkable. Pass ``centroids`` (a
     ``[(cid, [int components]), ...]`` list, e.g. from
     :func:`kmeans_centroids_portable`) to serve a TRAINED portable
-    index with the same exactness; for float/numpy training use
-    :func:`ivf_topk`/:func:`build_ivf_index` — the plan shape is
-    identical.
+    index with the same exactness.
 
     Assignment is relational (explode + broadcast centroid components +
-    groupBy) — the correctness-first O(N·D·C) form; at scale use
-    :func:`build_ivf_index`'s partition-pruned layout with the numpy
-    assignment pass."""
+    groupBy) — the correctness-first O(N·D·C) form."""
     import math
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -401,156 +401,6 @@ def brute_force_topk_np(
         batches, f"{id_col} long, cosine double"
     )
     return partial.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
-
-
-def kmeans_centroids(
-    df: DataFrame,
-    n_centroids: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_size: int = 10_000,
-    iterations: int = 10,
-) -> list[list[float]]:
-    """Spherical k-means on a deterministic hash-ordered sample (train
-    small on the driver, apply distributed — the sample bounds driver
-    memory regardless of corpus size). ``n_centroids=None`` sizes
-    sqrt(corpus) via :func:`auto_n_centroids_ivf` (one count job),
-    clamped to the sample size. Returns unit-norm centroids for
-    ``ivf_topk(..., centroids=...)``."""
-    import numpy as np
-
-    if n_centroids is None:
-        n_centroids = min(auto_n_centroids_ivf(df.count()), sample_size)
-    rows = (
-        df.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string")))
-        .limit(sample_size)
-        .collect()
-    )
-    x = np.vstack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    cents = x[:n_centroids].copy()
-    for _ in range(iterations):
-        assign = np.argmax(x @ cents.T, axis=1)
-        for c in range(len(cents)):
-            members = x[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                cents[c] = m / max(np.linalg.norm(m), 1e-12)
-    return [[float(v) for v in c] for c in cents]
-
-
-def _nearest_centroid_col(
-    centroids: list[list[float]], vec_col: str
-) -> Column:
-    """bucket = argmax cosine over the centroid array. Small centroid
-    sets stay a pure (codegen-able) expression; past 64 centroids the
-    C-branch expression tree stops being viable and assignment switches
-    to an Arrow-batched numpy matmul (one X @ C.T per batch — the
-    standard coarse-quantizer pass). Tie-break differs between the two
-    (expression: highest bucket wins; numpy argmax: lowest) — ties are
-    measure-zero for float embeddings and this path is not
-    oracle-checked (the exact-arithmetic contract lives in
-    assign_fixed_centroids)."""
-    if len(centroids) <= 64:
-        return _nearest_centroid_expr(centroids, vec_col)
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    c = np.asarray(centroids, dtype=np.float64)
-    cu = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-
-    def _assign(v):
-        x = np.vstack([np.asarray(row, dtype=np.float64) for row in v])
-        x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(x @ cu.T, axis=1).astype(np.int32))
-
-    # no type hints: `from __future__ import annotations` stringifies
-    # them, which pandas_udf's hint inference cannot resolve here
-    return pandas_udf(_assign, "int")(F.col(vec_col))
-
-
-def _nearest_centroid_expr(
-    centroids: list[list[float]], vec_col: str
-) -> Column:
-    """bucket = argmax cosine over the (broadcast-literal) centroid array."""
-    cvecs = [
-        F.array(*[F.lit(x) for x in c]).cast("array<float>") for c in centroids
-    ]
-    return F.array_max(
-        F.array(
-            *[
-                F.struct(
-                    cosine_similarity_col(F.col(vec_col), cvecs[i]).alias("s"),
-                    F.lit(i).alias("b"),
-                )
-                for i in range(len(centroids))
-            ]
-        )
-    ).getField("b")
-
-
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int | None = None,
-    n_probe: int = 4,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """IVF-style ANN: coarse-quantize the corpus to ``n_centroids`` buckets
-    (nearest centroid by cosine; None → sqrt(N) auto-sizing via
-    :func:`auto_n_centroids_ivf`, capped at 256 because this path
-    evaluates assignment as one C-branch expression — the uncapped
-    scale path is :func:`build_ivf_index`'s materialized layout), probe
-    the query's ``n_probe`` nearest buckets, exact re-rank inside them.
-
-    Default centroids are a deterministic hash-ordered sample of the
-    corpus (no training step, reproducible); pass
-    ``centroids=kmeans_centroids(df, ...)`` for trained buckets with
-    better recall — the plan shape (bucket column → partition pruning →
-    exact re-rank) stays identical. At scale, write the corpus
-    partitioned by ``__bucket`` so probing becomes partition pruning
-    instead of a filter.
-    """
-    import math
-
-    if centroids is None:
-        if n_centroids is None:
-            n_centroids = auto_n_centroids_ivf(df.count(), cap=256)
-        centroid_rows = (
-            df.select(id_col, vec_col)
-            .orderBy(F.xxhash64(F.col(id_col).cast("string")))
-            .limit(n_centroids)
-            .collect()
-        )
-        centroids = [[float(x) for x in r[vec_col]] for r in centroid_rows]
-
-    def cos_py(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / (na * nb) if na and nb else 0.0
-
-    probed = sorted(
-        range(len(centroids)),
-        key=lambda i: -cos_py(centroids[i], [float(x) for x in query_vec]),
-    )[:n_probe]
-
-    best = _nearest_centroid_col(centroids, vec_col)
-
-    q = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<float>")
-    candidates = df.withColumn("__bucket", best).filter(
-        F.col("__bucket").isin(probed)
-    )
-    scored = candidates.select(
-        F.col(id_col),
-        F.round(cosine_similarity_col(F.col(vec_col), q), 6).alias("cosine"),
-    )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
 
 
 def knn_join(
@@ -647,106 +497,6 @@ def knn_join_np(
     )
 
 
-# --- persisted IVF index (partition-pruned probes) -------------------------
-
-def build_ivf_index(
-    df: DataFrame,
-    path: str,
-    n_centroids: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroids: list[list[float]] | None = None,
-    train: bool = True,
-) -> list[list[float]]:
-    """Materialize an IVF index: assign each row its nearest centroid and
-    write the corpus parquet **partitioned by ``__bucket``**, so a probe
-    of ``n_probe`` buckets becomes a partition-pruned scan that never
-    opens the other ``n_centroids - n_probe`` directories. This is the
-    100 TB shape: index build is one linear pass + write, probe cost is
-    ``n_probe / n_centroids`` of the corpus regardless of total size.
-
-    Centroids default to trained spherical k-means (``train=True``) or a
-    deterministic hash-ordered sample; they are persisted UNDER the index
-    at ``_ivf_centroids`` (underscore-prefixed → invisible to parquet
-    discovery, like ``_SUCCESS``) so probes need no side-channel.
-    ``n_centroids=None`` → sqrt(N) auto-sizing (one count job; the list
-    count and per-list size then both grow O(sqrt(N)) instead of probe
-    cost growing linearly under a fixed default)."""
-    if n_centroids is None and centroids is None:
-        n_centroids = auto_n_centroids_ivf(df.count())
-    if centroids is None:
-        centroids = (
-            kmeans_centroids(df, n_centroids, vec_col, id_col)
-            if train
-            else None
-        )
-    if centroids is None:
-        rows = (
-            df.select(id_col, vec_col)
-            .orderBy(F.xxhash64(F.col(id_col).cast("string")))
-            .limit(n_centroids)
-            .collect()
-        )
-        centroids = [[float(x) for x in r[vec_col]] for r in rows]
-
-    (
-        df.withColumn("__bucket", _nearest_centroid_col(centroids, vec_col))
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(path)
-    )
-    spark = df.sparkSession
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
-        "bucket int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_ivf_centroids")
-    return centroids
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k against a ``build_ivf_index`` output. The ``__bucket``
-    predicate lands in the scan's PartitionFilters (verified by
-    ``tests/test_similarity.py``), so only the probed directories are
-    read."""
-    import math
-
-    cent_rows = spark.read.schema("bucket int, centroid array<double>").json(
-        f"{path}/_ivf_centroids"
-    ).collect()
-    centroids = {r["bucket"]: list(r["centroid"]) for r in cent_rows}
-    qv = [float(x) for x in query_vec]
-
-    def cos_py(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / (na * nb) if na and nb else 0.0
-
-    probed = sorted(centroids, key=lambda i: -cos_py(centroids[i], qv))[
-        :n_probe
-    ]
-    q = F.array(*[F.lit(x) for x in qv]).cast("array<float>")
-    scored = (
-        spark.read.parquet(path)
-        .filter(F.col("__bucket").isin(probed))
-        .select(
-            F.col(id_col),
-            F.round(cosine_similarity_col(F.col(vec_col), q), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
-
-
 def kmeans_centroids_portable(
     df: DataFrame,
     n_centroids: int | None = None,
@@ -768,9 +518,7 @@ def kmeans_centroids_portable(
 
     Distributed train: each iteration is one assignment (O(N·D·C)
     relational form) + one (cid, dim) aggregation; only the C×D
-    centroid matrix ever reaches the driver. float/numpy training
-    (:func:`kmeans_centroids`) remains the fast path where cross-engine
-    replay is not required.
+    centroid matrix ever reaches the driver.
 
     Returns driver-side ``[(cid, [int components]), ...]`` for
     :func:`ivf_topk_portable`'s ``centroids`` parameter.
@@ -1274,10 +1022,7 @@ def ivfpq_topk_portable(
     Plan shape: ONE codegen scan (centroid argmin + cell filter + PQ
     encode + ADC sum are all literal expressions) into a
     ``TakeOrderedAndProject`` — zero shuffles before the top-k; the
-    refine join broadcasts the bounded candidate set. In the
-    materialized layout (:func:`build_ivfpq_index`) the cell filter
-    becomes parquet partition pruning and the ADC scan reads only the
-    code column."""
+    refine join broadcasts the bounded candidate set."""
     dim = len(query_vec)
     dsub = _check_pq_params(dim, m, n_codes)
     if n_centroids < 1:
@@ -1322,192 +1067,6 @@ def ivfpq_topk_portable(
     codes = cand.select("id", _pq_codes_col(codebooks).alias("codes"))
     return _pq_serve(
         codes, cand.select("id", "q"), qq, codebooks, dsub, k, refine, id_col
-    )
-
-
-def build_ivfpq_index(
-    df: DataFrame,
-    path: str,
-    m: int = 8,
-    n_codes: int = 16,
-    n_centroids: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 1_000_000,
-    centroids: list | None = None,
-    codebooks: list | None = None,
-    train_iterations: int = 0,
-) -> tuple[list, list]:
-    """Materialize an IVF-PQ index: each row is routed to its nearest
-    centroid (exact integer L2) and written to parquet **partitioned by
-    ``__bucket``**, carrying its ``m``-int PQ ``codes`` column alongside
-    the original vector. This is the 100 TB ANN layout:
-
-    - a probe opens only ``n_probe`` of ``n_centroids`` directories
-      (partition pruning);
-    - the ADC ranking pass reads ONLY (id, codes) — for a 64-dim float
-      corpus that is a 32× smaller scan (column pruning), the entire
-      reason PQ exists;
-    - only the ≤ ``refine`` winners' full vectors are ever read, via a
-      broadcast semi-join inside the same pruned directories.
-
-    Centroids/codebooks default to the fixed lowest-id recipe
-    (``train_iterations`` > 0 trains codebooks with integer Lloyd) and
-    are persisted under the index as underscore-prefixed JSON sidecars
-    (invisible to parquet discovery, like ``_SUCCESS``), so probes need
-    no side-channel. Returns (centroids, codebooks)."""
-    first = df.select(vec_col).first()
-    dim = len(first[0])
-    dsub = _check_pq_params(dim, m, n_codes)
-    if n_centroids is None:
-        n_centroids = auto_n_centroids_ivf(df.count())
-    q = df.select(
-        F.col(id_col).alias("id"), _quantize_col(vec_col, scale).alias("q")
-    ).where(F.size("q") == dim)
-    if centroids is None:
-        rows = q.orderBy("id").limit(n_centroids).collect()
-        centroids = [
-            (cid, [int(v) for v in r["q"]]) for cid, r in enumerate(rows)
-        ]
-    if codebooks is None:
-        if train_iterations > 0:
-            codebooks = pq_codebooks_trained(
-                df, dim, m, n_codes, train_iterations, vec_col, id_col, scale
-            )
-        else:
-            codebooks = pq_codebooks_fixed(
-                df, dim, m, n_codes, vec_col, id_col, scale
-            )
-    (
-        q.select(
-            F.col("id").alias(id_col),
-            F.col("q"),
-            _pq_codes_col(codebooks).alias("codes"),
-            _argmin_l2_centroid(centroids).alias("__bucket"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(path)
-    )
-    spark = df.sparkSession
-    spark.createDataFrame(
-        [(cid, [int(v) for v in cvec]) for cid, cvec in centroids],
-        "cid int, cvec array<bigint>",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_ivfpq_centroids")
-    spark.createDataFrame(
-        [
-            (s, code, [int(v) for v in cvec])
-            for s, cb in enumerate(codebooks)
-            for code, cvec in cb
-        ],
-        "s int, code int, cvec array<bigint>",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_ivfpq_codebooks")
-    return centroids, codebooks
-
-
-def ivfpq_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    refine: int | None = None,
-    id_col: str = "vec_id",
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Top-k against a :func:`build_ivfpq_index` layout. The
-    ``__bucket`` predicate lands in the scan's PartitionFilters and the
-    ADC pass selects only (id, codes) — both pruning claims are
-    plan-asserted in ``tests/test_similarity.py``. Same integer
-    arithmetic as :func:`ivfpq_topk_portable`: given the same
-    centroids/codebooks the two return identical rows."""
-    if n_probe < 1:
-        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    if refine is not None and refine < k:
-        raise ValueError(f"refine must be >= k, got refine={refine}, k={k}")
-    centroids, codebooks = _read_ivfpq_artifacts(spark, path)
-    dsub = len(codebooks[0][0][1])
-    qq, _ = _quantize_query(query_vec, scale)
-    probed = [
-        cid
-        for _, cid in sorted(
-            (sum((a - b) * (a - b) for a, b in zip(qq, cvec)), cid)
-            for cid, cvec in centroids
-        )[:n_probe]
-    ]
-    pruned = spark.read.parquet(path).filter(F.col("__bucket").isin(probed))
-    codes = pruned.select(F.col(id_col).alias("id"), "codes")
-    qrel = pruned.select(F.col(id_col).alias("id"), "q")
-    return _pq_serve(codes, qrel, qq, codebooks, dsub, k, refine, id_col)
-
-
-def _read_ivfpq_artifacts(spark, path: str) -> tuple[list, list]:
-    """(centroids, codebooks) from a :func:`build_ivfpq_index` layout's
-    JSON sidecars — bounded driver state."""
-    cent_rows = spark.read.schema("cid int, cvec array<bigint>").json(
-        f"{path}/_ivfpq_centroids"
-    ).collect()
-    centroids = [(r["cid"], [int(v) for v in r["cvec"]]) for r in cent_rows]
-    cb_rows = spark.read.schema("s int, code int, cvec array<bigint>").json(
-        f"{path}/_ivfpq_codebooks"
-    ).collect()
-    by_s: dict = {}
-    for r in cb_rows:
-        by_s.setdefault(r["s"], []).append(
-            (r["code"], [int(v) for v in r["cvec"]])
-        )
-    codebooks = [sorted(by_s[s]) for s in sorted(by_s)]
-    return centroids, codebooks
-
-
-def append_to_ivfpq_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 1_000_000,
-) -> None:
-    """Incrementally add rows to an existing IVF-PQ layout: route and
-    encode the new batch with the index's OWN persisted centroids and
-    codebooks (read from the sidecars — no retraining, the standard
-    production contract: quantizers are versioned artifacts, data
-    arrives forever) and append only the touched ``__bucket``
-    partitions. The ingest cost is one map-only pass over the batch —
-    existing partitions are never rewritten, and serves pick up the new
-    rows with no index rebuild. Probes stay ``n_probe/n_centroids`` of
-    the (now larger) corpus."""
-    spark = df.sparkSession
-    centroids, codebooks = _read_ivfpq_artifacts(spark, path)
-    append_routed_ivfpq(df, path, centroids, codebooks, vec_col, id_col, scale)
-
-
-def append_routed_ivfpq(
-    df: DataFrame,
-    path: str,
-    centroids: list,
-    codebooks: list,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 1_000_000,
-) -> None:
-    """Route + encode + append with GIVEN quantizer artifacts — the
-    shared tail of batch (:func:`append_to_ivfpq_index`) and streaming
-    (``streaming/ann.py``) ingest, which reads the sidecars once per
-    stream instead of once per micro-batch."""
-    dim = len(centroids[0][1])
-    q = df.select(
-        F.col(id_col).alias("id"), _quantize_col(vec_col, scale).alias("q")
-    ).where(F.size("q") == dim)
-    (
-        q.select(
-            F.col("id").alias(id_col),
-            F.col("q"),
-            _pq_codes_col(codebooks).alias("codes"),
-            _argmin_l2_centroid(centroids).alias("__bucket"),
-        )
-        .write.mode("append")
-        .partitionBy("__bucket")
-        .parquet(path)
     )
 
 

@@ -25,5 +25,9 @@ SHUFFLE_PARTITIONS = int(os.environ.get("FTMCS_SHUFFLE_PARTITIONS", "32"))
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 #: driver-JVM heap for local mode (executors live in the driver process;
-#: 1g default starves 32 task threads).
-DRIVER_MEMORY = os.environ.get("FTMCS_DRIVER_MEMORY", "16g")
+#: 1g starves 32 task threads): a quarter of physical memory, between 1
+#: and 16 GiB, so several sessions fit on one box.
+_PHYS_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+DRIVER_MEMORY = os.environ.get(
+    "FTMCS_DRIVER_MEMORY", f"{max(1024, min(16384, _PHYS_MB // 4))}m"
+)

@@ -16,9 +16,10 @@ Replaces the reference's ClickHouse ``ReplacingMergeTree`` table
   subsequent reads skip the dedup shuffle.
 - **a small-store copy**: a compacted store (or value index) of at most
   ``SMALL_STORE_BYTES`` is read once per compaction into one in-memory
-  partition (an eager local checkpoint), keyed on its marker's payload
-  (write epoch, bytes, nonce). Reads are served from it until the marker
-  changes, so a serving call neither lists nor opens parquet files and
+  partition (an eager local checkpoint), keyed on its marker's nonce,
+  which each compaction and each value-index build draws anew. Reads
+  are served from it while the marker is current and keeps that nonce,
+  so a serving call neither lists nor opens parquet files and
   plans no shuffle — the analogue of the reference's one warm table. The
   Store releases a replaced copy itself and reads a copy whose block was
   lost again from parquet (see ``Store._small_copy``).
@@ -103,27 +104,20 @@ def _read_marker(path: str) -> dict | None:
     return payload
 
 
-def _inventory(root: str) -> dict[str, int]:
-    """Relative path → size for every file under ``root``."""
-    inv: dict[str, int] = {}
+def _data_bytes(root: str) -> int:
+    """Bytes of the files under ``root`` that a parquet scan reads: Spark
+    skips names that start with ``_`` or ``.`` (``_SUCCESS``,
+    checksums)."""
+    total = 0
     for dirpath, _dirs, files in os.walk(root):
         for fn in files:
-            p = os.path.join(dirpath, fn)
+            if fn.startswith(("_", ".")):
+                continue
             try:
-                inv[os.path.relpath(p, root)] = os.path.getsize(p)
+                total += os.path.getsize(os.path.join(dirpath, fn))
             except OSError:
                 pass
-    return inv
-
-
-def _data_bytes(inv: dict[str, int]) -> int:
-    """Bytes of the files a parquet scan reads: Spark skips names that
-    start with ``_`` or ``.`` (``_SUCCESS``, checksums)."""
-    return sum(
-        size
-        for rel, size in inv.items()
-        if not os.path.basename(rel).startswith(("_", "."))
-    )
+    return total
 
 
 class _Copy:
@@ -133,9 +127,9 @@ class _Copy:
     A local checkpoint keeps the single partition in the plan (the
     aggregates above need no Exchange) and, unlike ``persist()``, never
     enters Spark's CacheManager, so no query pays its plan look-ups.
-    ``key`` is the marker payload the copy was read under."""
+    ``key`` is the nonce of the marker the copy was read under."""
 
-    def __init__(self, scan: DataFrame, key: dict):
+    def __init__(self, scan: DataFrame, key: str):
         self.key = key
         self.df = scan.coalesce(1).localCheckpoint(eager=True)
         self._rdd = self.df._jdf.queryExecution().analyzed().rdd()
@@ -171,7 +165,6 @@ class Store:
         self._path = os.path.join(self.uri, "statements")
         self._marker = os.path.join(self.uri, "_compacted")
         self._epoch_file = os.path.join(self.uri, "_epoch")
-        self._inventory_file = os.path.join(self.uri, "_compacted_inventory")
         self._index_path = os.path.join(self.uri, "value_index")
         # inside the index directory, so it is swapped in with the index
         self._index_marker = os.path.join(self._index_path, "_built")
@@ -199,13 +192,12 @@ class Store:
     # ``statements/`` without bumping the epoch (raw ``cp``/``rsync``
     # into the directory) is out-of-contract and will NOT invalidate
     # the fast path; external writers must call ``bump_epoch()`` (or any
-    # store API). ``verify_compacted()`` offers the deep inventory check
-    # for ops tooling. The fast path applies ONLY when no resolver is
-    # installed: the content-hash ``id`` excludes canonical_id, so two
-    # on-disk rows distinct only in canonical_id (written at different
-    # resolution states) share an id — a resolver remap CAN merge them
-    # into equal keys, and that read must dedup (round-8 self-review
-    # finding, regression-tested).
+    # store API); the read path does not look at the files. The fast
+    # path applies ONLY when no resolver is installed: the content-hash
+    # ``id`` excludes canonical_id, so two on-disk rows distinct only in
+    # canonical_id (written at different resolution states) share an id
+    # — a resolver remap CAN merge them into equal keys, and that read
+    # must dedup (round-8 self-review finding, regression-tested).
     def _read_epoch(self) -> int:
         try:
             with open(self._epoch_file) as fh:
@@ -225,19 +217,15 @@ class Store:
         return epoch
 
     def _set_compacted(self) -> None:
-        # inventory in its OWN file: the marker stays a few bytes so
-        # the per-DataFrame-build is_compacted() parse is O(1) even
-        # when the store holds millions of files; only the deep
-        # verify_compacted() reads the (store-sized) inventory. The
-        # marker carries the data bytes for the small-store rule (see
+        # the marker stays a few bytes, so the per-DataFrame-build
+        # is_compacted() parse is O(1) however many files the store
+        # holds. It carries the data bytes for the small-store rule (see
         # statements()), so reads never walk the store to size it, and a
-        # nonce, so a store re-created at the same path never matches
-        # the key of a copy read from the old one.
-        inv = _inventory(self._path)
-        _write_json(self._inventory_file, inv)
+        # nonce, the key of the small-store copy: a store re-created at
+        # the same path never matches a copy read from the old one.
         _write_json(self._marker, {
             "epoch": self._read_epoch(),
-            "bytes": _data_bytes(inv),
+            "bytes": _data_bytes(self._path),
             "nonce": uuid.uuid4().hex,
         })
 
@@ -262,21 +250,6 @@ class Store:
         pre-epoch legacy marker reads as not compacted (fail-safe —
         costs one dedup, never skips one)."""
         return self._current(self._marker) is not None
-
-    def verify_compacted(self) -> bool:
-        """Deep check for ops tooling: epoch match AND the on-disk file
-        inventory (relative path + size) is exactly what the marker
-        recorded at compaction time — detects out-of-contract writers
-        that added/replaced files without bumping the epoch, including
-        mtime-preserving placements (``mv``, ``rsync -a``)."""
-        if not self.is_compacted():
-            return False
-        try:
-            with open(self._inventory_file) as fh:
-                recorded = json.load(fh)
-        except (OSError, ValueError):
-            return False
-        return recorded == _inventory(self._path)
 
     # --- DDL (S8, S9) -------------------------------------------------------
     def ensure(self) -> None:
@@ -367,12 +340,14 @@ class Store:
         ``path`` when ``marker`` (a current marker payload, or None)
         records at most ``SMALL_STORE_BYTES`` of data, else None.
 
-        Key: the copy is read once and served while ``marker`` equals the
-        payload it was read under. Every marker carries the write epoch
-        and a nonce drawn when it was written, so a write, a compaction,
-        a value-index rebuild or a store re-created at the same path all
-        change the key. A marker without a byte count means size unknown:
-        no copy.
+        Key: the copy is read once and served while ``marker`` carries
+        the nonce it was read under. A compaction, a value-index build
+        and a store re-created at the same path each draw a new nonce; a
+        write makes the marker stale (``marker`` is None), which releases
+        the copy. The re-stamp :meth:`optimize` gives a current value
+        index keeps its nonce, and with it the copy: the index files did
+        not change. A marker without a byte count (size unknown) or
+        without a nonce gets no copy.
 
         Release: a copy whose key no longer matches (or when the rule no
         longer applies) is unpersisted here, at the next read, and by
@@ -386,18 +361,23 @@ class Store:
 
         One copy per directory per Store, built under a lock: concurrent
         first reads build it once."""
-        size = marker.get("bytes") if marker is not None else None
-        small = isinstance(size, int) and size <= SMALL_STORE_BYTES
+        marker = marker or {}
+        size, nonce = marker.get("bytes"), marker.get("nonce")
+        small = (
+            nonce is not None
+            and isinstance(size, int)
+            and size <= SMALL_STORE_BYTES
+        )
         with self._copy_lock:
             held = self._copies.pop(path, None)
             if held is not None:
-                if small and held.key == marker and held.live():
+                if small and held.key == nonce and held.live():
                     self._copies[path] = held
                     return held.df
                 held.release()
             if not small:
                 return None
-            copy = _Copy(self._scan(path), marker)
+            copy = _Copy(self._scan(path), nonce)
             self._copies[path] = copy
             return copy.df
 
@@ -609,7 +589,7 @@ class Store:
             os.path.join(tmp, os.path.basename(self._index_marker)),
             {
                 "epoch": epoch,
-                "bytes": _data_bytes(_inventory(tmp)),
+                "bytes": _data_bytes(tmp),
                 "nonce": uuid.uuid4().hex,
             },
         )
@@ -638,9 +618,10 @@ class Store:
         current. The small-store rule of :meth:`statements` applies to
         the index by its own marker: an index of at most
         ``SMALL_STORE_BYTES`` is served from an in-memory copy of one
-        partition, read once per build and keyed on the index marker (so
-        a rebuild, or the re-stamp :meth:`optimize` gives it, reads a new
-        copy and releases the old one); see :meth:`_small_copy`."""
+        partition, read once per build and keyed on the index marker's
+        nonce (a rebuild reads a new copy and releases the old one; the
+        re-stamp :meth:`optimize` gives a current index keeps its copy);
+        see :meth:`_small_copy`."""
         marker = self._current(self._index_marker)
         # asked with a stale marker too: that releases a held copy
         copy = self._small_copy(self._index_path, marker)
@@ -658,15 +639,6 @@ class Store:
         if idx is None:
             return self.statements(dataset).filter(F.col("prop_type") == "entity")
         return self._apply_canonical(_scoped(idx, dataset))
-
-    def register_views(self, prefix: str = "") -> None:
-        """Expose the store to ``spark.sql``: ``<prefix>statements`` (deduped)
-        and ``<prefix>entities`` (assembled) temp views."""
-        from ftm_columnstore_spark.operators.assembly import assemble_entities
-
-        stmts = self.statements()
-        stmts.createOrReplaceTempView(f"{prefix}statements")
-        assemble_entities(stmts).createOrReplaceTempView(f"{prefix}entities")
 
     # --- maintenance (P5) -----------------------------------------------------
     def _promote(

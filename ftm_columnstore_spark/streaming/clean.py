@@ -7,8 +7,10 @@ corpus once at stream start and persisted across micro-batches.
 
 Each stage reuses the exact batch operator, so streaming ingest and a
 batch backfill of the same files produce identical survivors and
-identical cleaned text — one cleanup semantics, not two (the same
-contract streaming/dedup.py establishes for its single-stage streams).
+identical cleaned text — one cleanup semantics, not two. A single-stage
+stream is this one with the other stages off: ``near_dedup={...},
+substring_k=None`` for the near-dup drop alone, ``substring_k=k`` alone
+for the span cut.
 
 Per micro-batch cost: columnar gate scan + batch-sized LM join (the
 count relations are vocabulary-bounded and broadcastable) + batch gram

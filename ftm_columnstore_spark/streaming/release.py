@@ -1,7 +1,7 @@
 """Release a stream's persisted reference artifacts when its query
 terminates — the streaming rule of :mod:`ftm_columnstore_spark.lifecycle`.
 Without it the LM counts, gram indexes and banded signatures of the
-corpus-index streams (streaming/clean.py, streaming/dedup.py) would stay
+corpus-index stream (streaming/clean.py) would stay
 cached for the life of the SESSION, leaking executor storage every time
 a stream restarts with a refreshed index.
 """

@@ -10,7 +10,7 @@ from ftm_columnstore_spark.operators.dedup import (
     minhash_lsh_pairs,
     minhash_signature,
     ngram_jaccard_pairs,
-    simhash_pairs,
+    simhash_pairs_portable,
 )
 
 BASE = (
@@ -103,16 +103,6 @@ def test_minhash_dedup(corpus):
     assert kept == [1, 4, 5]
 
 
-def test_simhash_pairs(corpus):
-    # bands=8 → any pair with hamming ≤ 7 shares a chunk (pigeonhole)
-    pairs = {
-        (r["left_id"], r["right_id"]): r["hamming"]
-        for r in simhash_pairs(corpus, max_hamming=6, bands=8).collect()
-    }
-    assert pairs[(1, 2)] == 0  # identical text → identical simhash
-    assert (4, 5) not in pairs  # unrelated docs don't pair
-
-
 def test_embedding_dup_pairs_portable(spark):
     from ftm_columnstore_spark.operators.dedup import embedding_dup_pairs_portable
 
@@ -131,8 +121,7 @@ def test_embedding_dup_pairs_portable(spark):
 
 
 def test_simhash_pairs_portable(corpus):
-    from ftm_columnstore_spark.operators.dedup import simhash_pairs_portable
-
+    # bands=8 → any pair with hamming ≤ 7 shares a chunk (pigeonhole)
     pairs = {
         (r["left_id"], r["right_id"]): r["hamming"]
         for r in simhash_pairs_portable(corpus, max_hamming=6, bands=8).collect()
@@ -159,7 +148,7 @@ def test_simhash_near_dup_long_doc(spark):
     )
     pairs = {
         (r["left_id"], r["right_id"]): r["hamming"]
-        for r in simhash_pairs(df, max_hamming=14, bands=16).collect()
+        for r in simhash_pairs_portable(df, max_hamming=14, bands=16).collect()
     }
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
@@ -190,17 +179,13 @@ def test_simhash_param_validation(spark, docs_df=None):
     pigeonhole recall guarantee)."""
     import pytest
 
-    from ftm_columnstore_spark.operators.dedup import (
-        simhash_chunks,
-        simhash_pairs,
-        simhash_pairs_portable,
-    )
+    from ftm_columnstore_spark.operators.dedup import simhash_chunks
 
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with pytest.raises(ValueError, match="evenly divide 64"):
         simhash_chunks(df, bands=5)
     with pytest.raises(ValueError, match="evenly divide 64"):
-        simhash_pairs(df, bands=7)
+        simhash_pairs_portable(df, bands=7)
     with pytest.raises(ValueError, match="must be < bands"):
         simhash_pairs_portable(df, bands=4, max_hamming=4)
 

@@ -89,19 +89,6 @@ def test_knn_join(vectors):
         assert sims == sorted(sims, reverse=True)
 
 
-def test_ivf_topk_recall(vectors):
-    from ftm_columnstore_spark.operators.similarity import ivf_topk
-
-    q = list(vectors.filter(F.col("vec_id") == 0).collect()[0]["embedding"])
-    exact = {r["vec_id"] for r in brute_force_topk(vectors, q, k=10).collect()}
-    approx = {
-        r["vec_id"]
-        for r in ivf_topk(vectors, q, k=10, n_centroids=8, n_probe=4).collect()
-    }
-    assert len(approx) == 10
-    assert len(exact & approx) >= 5
-
-
 def test_brute_force_np_matches_columnar(vectors):
     from ftm_columnstore_spark.operators.similarity import brute_force_topk_np
 
@@ -112,50 +99,24 @@ def test_brute_force_np_matches_columnar(vectors):
 
 
 def test_ivf_trained_centroids_recall(vectors):
+    """Integer-Lloyd centroids serve through ivf_topk_portable with
+    recall against the exact top-k."""
     from ftm_columnstore_spark.operators.similarity import (
-        ivf_topk,
-        kmeans_centroids,
+        ivf_topk_portable,
+        kmeans_centroids_portable,
     )
 
-    cents = kmeans_centroids(vectors, n_centroids=8, sample_size=200)
-    assert len(cents) == 8 and len(cents[0]) == 16
+    cents = kmeans_centroids_portable(vectors, n_centroids=8)
+    assert len(cents) == 8 and all(len(v) == 16 for _, v in cents)
     q = list(vectors.filter(F.col("vec_id") == 0).collect()[0]["embedding"])
     exact = {r["vec_id"] for r in brute_force_topk(vectors, q, k=10).collect()}
     trained = {
         r["vec_id"]
-        for r in ivf_topk(vectors, q, k=10, n_probe=4, centroids=cents).collect()
+        for r in ivf_topk_portable(
+            vectors, q, k=10, n_probe=4, centroids=cents
+        ).collect()
     }
     assert len(exact & trained) >= 6
-
-
-def test_ivf_index_build_and_probe(vectors, tmp_path):
-    """Persisted IVF index: probe results equal the in-memory ivf_topk
-    with the same centroids, and the probe scan is partition-pruned."""
-    from ftm_columnstore_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk,
-        ivf_topk_indexed,
-    )
-
-    spark = vectors.sparkSession
-    path = str(tmp_path / "ivf_index")
-    cents = build_ivf_index(vectors, path, n_centroids=8)
-    assert len(cents) == 8
-
-    q = list(vectors.filter(F.col("vec_id") == 0).collect()[0]["embedding"])
-    indexed = ivf_topk_indexed(spark, path, q, k=10, n_probe=4)
-    got = [(r["vec_id"], r["cosine"]) for r in indexed.collect()]
-    want = [
-        (r["vec_id"], r["cosine"])
-        for r in ivf_topk(vectors, q, k=10, n_probe=4, centroids=cents).collect()
-    ]
-    assert got == want
-
-    # the __bucket predicate must prune partitions, not filter rows
-    plan = indexed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__bucket" in plan.split(
-        "PartitionFilters"
-    )[1][:200]
 
 
 def test_knn_join_np_matches_expression_path(spark):
@@ -300,12 +261,9 @@ def test_semantic_dedup_auto_sizing_scales(spark):
 
 
 def test_ivf_topk_auto_sizing(spark):
-    """ivf_topk / ivf_topk_portable run with the None default (auto
-    count job) and still return exact-cosine-ordered results."""
-    from ftm_columnstore_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_portable,
-    )
+    """ivf_topk_portable runs with the None default (auto count job)
+    and still returns exact-cosine-ordered results."""
+    from ftm_columnstore_spark.operators.similarity import ivf_topk_portable
 
     rows = [
         (i, [float((i * 7 + j * 3) % 10) / 10 + 0.01 for j in range(8)])
@@ -314,43 +272,8 @@ def test_ivf_topk_auto_sizing(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = ivf_topk_portable(df, rows[0][1], k=5, n_probe=16).collect()
     assert 0 < len(got) <= 5
-    got2 = ivf_topk(df, rows[0][1], k=5, n_probe=16).collect()
-    assert 0 < len(got2) <= 5
-    # the target vector itself ranks first in both
-    assert got[0]["vec_id"] == 0 and got2[0]["vec_id"] == 0
-
-
-def test_nearest_centroid_numpy_path_matches_expr(spark):
-    """Past 64 centroids assignment switches to the Arrow numpy matmul;
-    on tie-free data it assigns identically to the expression path."""
-    from ftm_columnstore_spark.operators.similarity import (
-        _nearest_centroid_col,
-        _nearest_centroid_expr,
-    )
-
-    import random
-
-    rng = random.Random(7)
-    cents = [
-        [rng.uniform(-1, 1) for _ in range(6)] for _ in range(70)
-    ]
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(6)]) for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    a = {
-        r["vec_id"]: r["b"]
-        for r in df.select(
-            "vec_id", _nearest_centroid_col(cents, "embedding").alias("b")
-        ).collect()
-    }
-    b = {
-        r["vec_id"]: r["b"]
-        for r in df.select(
-            "vec_id", _nearest_centroid_expr(cents, "embedding").alias("b")
-        ).collect()
-    }
-    assert a == b
+    # the target vector itself ranks first
+    assert got[0]["vec_id"] == 0
 
 
 # --- product quantization ----------------------------------------------------
@@ -683,61 +606,6 @@ def test_ivfpq_portable_refine_matches_python_replay(vectors):
     assert got == expected
 
 
-def test_ivfpq_indexed_matches_portable(vectors, tmp_path):
-    from ftm_columnstore_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk_indexed,
-        ivfpq_topk_portable,
-    )
-
-    path = str(tmp_path / "ivfpq")
-    cents, cbs = build_ivfpq_index(
-        vectors, path, m=4, n_codes=16, n_centroids=8
-    )
-    q = list(vectors.filter(F.col("vec_id") == 17).first()["embedding"])
-    spark = vectors.sparkSession
-    for refine in (None, 40):
-        a = [
-            (r["vec_id"], r["adist"])
-            for r in ivfpq_topk_indexed(
-                spark, path, q, k=5, n_probe=3, refine=refine
-            ).collect()
-        ]
-        b = [
-            (r["vec_id"], r["adist"])
-            for r in ivfpq_topk_portable(
-                vectors, q, k=5, m=4, n_codes=16, n_centroids=8, n_probe=3,
-                refine=refine, centroids=cents, codebooks=cbs,
-            ).collect()
-        ]
-        assert a == b and len(a) == 5
-
-
-def test_ivfpq_indexed_prunes_partitions_and_columns(vectors, tmp_path):
-    """The two 100 TB claims, plan-asserted: probes only open probed
-    __bucket directories, and the ADC pass reads ONLY (id, codes) —
-    never the vector column."""
-    from ftm_columnstore_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk_indexed,
-    )
-
-    path = str(tmp_path / "ivfpq")
-    build_ivfpq_index(vectors, path, m=4, n_codes=16, n_centroids=8)
-    spark = vectors.sparkSession
-    q = [0.1] * 16
-    plan = (
-        ivfpq_topk_indexed(spark, path, q, k=5, n_probe=2)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "__bucket" in plan and "PartitionFilters" in plan
-    # the no-refine serve plan never touches the vector column
-    import re
-
-    for m_ in re.finditer(r"ReadSchema: ([^\n]*)", plan):
-        assert '"q"' not in m_.group(1) and "q:" not in m_.group(1)
-
-
 def test_ivfpq_params_validated(vectors):
     from ftm_columnstore_spark.operators.similarity import ivfpq_topk_portable
 
@@ -748,42 +616,6 @@ def test_ivfpq_params_validated(vectors):
         ivfpq_topk_portable(vectors, q, m=4, n_probe=0)
     with pytest.raises(ValueError, match="refine"):
         ivfpq_topk_portable(vectors, q, k=10, m=4, refine=2)
-
-
-def test_ivfpq_append_matches_full_build(vectors, tmp_path):
-    """Appending a batch with the index's persisted artifacts must serve
-    identically to the portable path over the full corpus with the same
-    centroids/codebooks — no rebuild, no drift."""
-    from ftm_columnstore_spark.operators.similarity import (
-        append_to_ivfpq_index,
-        build_ivfpq_index,
-        ivfpq_topk_indexed,
-        ivfpq_topk_portable,
-    )
-
-    first = vectors.filter(F.col("vec_id") < 100)
-    rest = vectors.filter(F.col("vec_id") >= 100)
-    path = str(tmp_path / "ivfpq_inc")
-    cents, cbs = build_ivfpq_index(first, path, m=4, n_codes=16, n_centroids=8)
-    append_to_ivfpq_index(rest, path)
-    spark = vectors.sparkSession
-    q = list(vectors.filter(F.col("vec_id") == 150).first()["embedding"])
-    a = [
-        (r["vec_id"], r["adist"])
-        for r in ivfpq_topk_indexed(
-            spark, path, q, k=5, n_probe=3, refine=40
-        ).collect()
-    ]
-    b = [
-        (r["vec_id"], r["adist"])
-        for r in ivfpq_topk_portable(
-            vectors, q, k=5, m=4, n_codes=16, n_probe=3, refine=40,
-            centroids=cents, codebooks=cbs,
-        ).collect()
-    ]
-    assert a == b and len(a) == 5
-    # appended rows are reachable (the query IS an appended row)
-    assert a[0] == (150, 0)
 
 
 def test_pq_knn_join_matches_python_replay(vectors):

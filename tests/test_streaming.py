@@ -340,14 +340,15 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
 
 def test_stream_dedup_against_corpus(spark, tmp_path):
-    """Micro-batches are near-dedup'd against a static corpus index:
-    near-dups of corpus docs are dropped, novel docs survive."""
+    """The clean stream with only its near-dup stage on: micro-batches
+    are near-dedup'd against a static corpus index, near-dups of corpus
+    docs are dropped, novel docs survive."""
     import json
 
     from pyspark.sql import types as T
 
-    from ftm_columnstore_spark.streaming.dedup import (
-        stream_dedup_against_corpus,
+    from ftm_columnstore_spark.streaming.clean import (
+        stream_clean_against_corpus,
     )
 
     base = ("the quick brown fox jumps over the lazy dog and keeps on "
@@ -373,14 +374,15 @@ def test_stream_dedup_against_corpus(spark, tmp_path):
         ]
     )
     out = tmp_path / "deduped"
-    q = stream_dedup_against_corpus(
+    q = stream_clean_against_corpus(
         spark,
         str(src),
         corpus,
         str(out),
         str(tmp_path / "ckpt_dedup"),
         schema,
-        min_jaccard_est=0.5,
+        substring_k=None,
+        near_dedup={"min_jaccard_est": 0.5},
         available_now=True,
     )
     q.awaitTermination(120)
@@ -389,17 +391,18 @@ def test_stream_dedup_against_corpus(spark, tmp_path):
 
 
 def test_stream_substring_cut_against_corpus(spark, tmp_path, cache_empty):
-    """Micro-batch documents lose the spans already present in the
-    static corpus; novel text is untouched. The persisted corpus index
-    outlives the caller scope the stream was started in and is released
-    when the query terminates."""
+    """The clean stream with only its span-cut stage on: micro-batch
+    documents lose the spans already present in the static corpus;
+    novel text is untouched. The persisted corpus index outlives the
+    caller scope the stream was started in and is released when the
+    query terminates."""
     import json
 
     from pyspark.sql import types as T
 
     from ftm_columnstore_spark.lifecycle import scope
-    from ftm_columnstore_spark.streaming.dedup import (
-        stream_substring_cut_against_corpus,
+    from ftm_columnstore_spark.streaming.clean import (
+        stream_clean_against_corpus,
     )
 
     span = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -423,22 +426,24 @@ def test_stream_substring_cut_against_corpus(spark, tmp_path, cache_empty):
     )
     out = tmp_path / "cleaned"
     with scope():
-        q = stream_substring_cut_against_corpus(
+        q = stream_clean_against_corpus(
             spark,
             str(src),
             corpus,
             str(out),
             str(tmp_path / "ckpt_ss"),
             schema,
-            k=8,
+            substring_k=8,
         )
     try:
         q.processAllAvailable()
-        rows = {r["id"]: r for r in spark.read.parquet(str(out)).collect()}
+        rows = {
+            r["doc_id"]: r["text"]
+            for r in spark.read.parquet(str(out)).collect()
+        }
         # byte-preserving span cut keeps the separators around the span
-        assert rows[100]["text"] == "intro  outro"
-        assert rows[100]["n_removed"] == 10
-        assert rows[101]["n_removed"] == 0
+        assert rows[100] == "intro  outro"
+        assert rows[101] == incoming[1]["text"]
         # the index is still cached while the query runs
         assert not cache_empty()
     finally:
@@ -523,68 +528,6 @@ def test_stream_clean_against_corpus(spark, tmp_path):
     assert set(rows) == {101, 104}
     assert "alpha" not in rows[101] and "fox runs" in rows[101]
     assert "fox" in rows[104]
-
-
-def test_stream_index_ivfpq_matches_batch_append(spark, tmp_path):
-    """Streamed micro-batch ingest into an IVF-PQ index must serve
-    identically to the batch full-corpus build with the same quantizer
-    artifacts (shared append path by construction)."""
-    import json as _json
-    import random
-
-    from pyspark.sql import functions as F
-
-    from ftm_columnstore_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk_indexed,
-        ivfpq_topk_portable,
-    )
-    from ftm_columnstore_spark.streaming.ann import stream_index_ivfpq
-
-    rng = random.Random(11)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(120)
-    ]
-    all_vecs = spark.createDataFrame(rows, ["vec_id", "embedding"]).withColumn(
-        "embedding", F.col("embedding").cast("array<float>")
-    )
-    first = all_vecs.filter(F.col("vec_id") < 60)
-    path = str(tmp_path / "ivfpq_stream")
-    cents, cbs = build_ivfpq_index(first, path, m=4, n_codes=16, n_centroids=8)
-
-    src = tmp_path / "vec_src"
-    src.mkdir()
-    late = [
-        {"vec_id": i, "embedding": [float(x) for x in v]}
-        for i, v in rows
-        if i >= 60
-    ]
-    (src / "a.json").write_text("\n".join(_json.dumps(r) for r in late))
-    q = stream_index_ivfpq(
-        spark,
-        str(src),
-        path,
-        str(tmp_path / "ckpt"),
-        "vec_id bigint, embedding array<float>",
-        available_now=True,
-    )
-    q.awaitTermination(120)
-
-    qv = rows[90][1]
-    a = [
-        (r["vec_id"], r["adist"])
-        for r in ivfpq_topk_indexed(
-            spark, path, qv, k=5, n_probe=3, refine=40
-        ).collect()
-    ]
-    b = [
-        (r["vec_id"], r["adist"])
-        for r in ivfpq_topk_portable(
-            all_vecs, qv, k=5, m=4, n_codes=16, n_probe=3, refine=40,
-            centroids=cents, codebooks=cbs,
-        ).collect()
-    ]
-    assert a == b and a[0] == (90, 0)
 
 
 def test_stream_clean_classifier_stage(spark, tmp_path):
